@@ -39,16 +39,6 @@ def canonical_map(entities: DataFrame) -> DataFrame:
     )
 
 
-def canonical_map_broadcast(spark, entities: DataFrame):
-    """{entity_id: canonical_id} as a broadcast dict for the fused
-    map-side path (linking.link_and_extract)."""
-    pdf = canonical_map(entities).toPandas()
-    mapping = {
-        int(e): int(c) for e, c in zip(pdf["entity_id"], pdf["canonical_id"])
-    }
-    return spark.sparkContext.broadcast(mapping)
-
-
 def union_find_mapping(entity_ids, redirect_pairs) -> dict[int, int]:
     """Driver-side twin of canonical_map over ALREADY-COLLECTED rows:
     min-id union-find over the redirect pairs (the shared

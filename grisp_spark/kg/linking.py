@@ -11,6 +11,13 @@ partitions, exactly like the reference's "LMDB to avoid distributed
 data" design (/root/reference/README.md:9) but with Spark broadcast
 instead of local LMDB files.
 
+This module holds the one Python linking core (_pick_batch, every
+score mode) and the one turn-window triple emitter
+(emit_window_triples). The broadcast, fused, shuffle
+(kg/linking_shuffle.py) and streaming (streaming/stateful.py) kernels
+all score through the former; the fused and streaming kernels emit
+through the latter. Only the oracle keeps its own copy of both.
+
 Scale notes (100 TB): the broadcast gazetteer is the working-set
 bound (reference sizes: ~64M labels, LabelCache.java:46). A python
 dict of 64M surfaces is ~10-15 GB — at that scale swap the dict for a
@@ -132,9 +139,10 @@ def build_kb_broadcasts(spark: SparkSession, kb: dict[str, DataFrame], wvec_bc=N
     """(gaz_bc, evec_bc, canon_bc) from ONE collection per KB table:
     entities ride to the driver once — (entity_id, context_vocab,
     redirect_to) — feeding both the vector build and a driver-side
-    min-id union-find for the canonical map. Two driver jobs instead
-    of the 5-6 that separate build_broadcasts +
-    canonical_map_broadcast runs cost (each toPandas/count is a full
+    min-id union-find for the canonical map (the driver twin of
+    canonicalize.canonical_map's connected components). Two driver
+    jobs instead of the 5-6 that build_broadcasts plus a collected
+    canonicalize.canonical_map cost (each toPandas/count is a full
     job; the reference's DumpExtractor.java:253-344 likewise builds
     all its LMDB caches in one pass). Broadcast-regime only, like its
     callers — beyond BROADCAST_LABEL_LIMIT use the shuffle path."""
@@ -174,29 +182,30 @@ def build_kb_broadcasts(spark: SparkSession, kb: dict[str, DataFrame], wvec_bc=N
     return sc.broadcast(gaz), sc.broadcast(evecs), sc.broadcast(canon)
 
 
-_MISSING = object()  # lr_context_matrix legitimately returns None
-
 # Executor-local packed entity-vector matrix, keyed by the evec
 # broadcast id (same rationale as _IDX_CACHE).
 _EVEC_PACK_CACHE: dict[int, tuple] = {}
 
 
+def _build_evec_pack(evecs: dict):
+    """{entity_id: vector} → ({entity_id: row}, float64 matrix).
+    Stored float64 (exact embedding of the float32 vectors) so the
+    per-candidate gather feeds cosine_batch conversion-free. Trailing
+    ZERO row: a sense whose entity_id has no entities row
+    (referential-integrity violation in the KB) scores with the zero
+    vector — spec.centroid's empty-vocab result and the shuffle path's
+    left-join default — instead of KeyError-ing."""
+    eids = sorted(evecs)
+    rows = [evecs[e] for e in eids]
+    rows.append(np.zeros(spec.EMBED_DIM, dtype=np.float64))
+    return {e: i for i, e in enumerate(eids)}, np.stack(rows, dtype=np.float64)
+
+
 def _evec_pack(evecs: dict, cache_key: int):
     pack = _EVEC_PACK_CACHE.get(cache_key)
     if pack is None:
-        eids = sorted(evecs)
-        idx = {e: i for i, e in enumerate(eids)}
-        # stored float64 (exact embedding of the float32 vectors) so
-        # the per-candidate gather feeds cosine_batch conversion-free.
-        # Trailing ZERO row: a sense whose entity_id has no entities
-        # row (referential-integrity violation in the KB) scores with
-        # the zero vector — spec.centroid's empty-vocab result and the
-        # shuffle path's left-join default — instead of KeyError-ing
-        rows = [evecs[e] for e in eids]
-        rows.append(np.zeros(spec.EMBED_DIM, dtype=np.float64))
-        E = np.stack(rows, dtype=np.float64)
         _EVEC_PACK_CACHE.clear()
-        _EVEC_PACK_CACHE[cache_key] = pack = (idx, E)
+        _EVEC_PACK_CACHE[cache_key] = pack = _build_evec_pack(evecs)
     return pack
 
 
@@ -206,37 +215,114 @@ def _evec_pack(evecs: dict, cache_key: int):
 MAX_CTX_ROWS_PER_CHUNK = 2_000_000
 
 
-def _pick_batch_centroid(
-    tokens_by_row, found_by_row, gaz, evec_pack, vec_fn, interned=None
+def _pick_batch(
+    tokens_by_row, found_by_row, gaz, evecs, evec_pack, score_mode, vec_fn,
+    interned=None,
 ):
-    """Centroid-mode scoring for a WHOLE Arrow batch in a few numpy
-    ops instead of 3-4 small numpy calls per mention: intern the
-    batch's distinct context words into one small float64 matrix,
-    GATHER the per-mention context rows by integer index (C-speed —
-    stacking ~1M tiny arrays was 2s/100k rows), one sequential
-    segment-fold (spec.seq_segment_sums) per chunk for the centroids,
-    one row-wise cosine for all (mention, candidate) pairs, one
-    lexsort argmax (spec.pick_batch).
-    Bit-identical to the per-row path because spec.centroid/cosine are
-    single-segment wrappers of the same batch primitives, gathered
-    rows are the exact float32 word vectors (float64 embedding is
-    exact), and chunking is per-mention (segment math is unaffected).
-    Chunks bound worker memory on long texts."""
-    eidx, E = evec_pack
-    vf = vec_fn or _cached_word_vec
-    active = [
-        (row_i, tokens, found)
-        for row_i, (tokens, found) in enumerate(zip(tokens_by_row, found_by_row))
-        if found
-    ]
+    """The one Python linking core: candidate scoring + argmax for
+    every detected span of a WHOLE batch, in every spec.SCORE_MODES
+    mode. The broadcast, fused, shuffle and streaming kernels all pick
+    through it; only the oracle scores independently.
+
+    Each distinct surface gets one candidate template (eidx row,
+    entity id, prior) per batch — hot surfaces repeat constantly, and
+    the prior division is identical whichever mention triggers it.
+    Context scores then come per mode: ``prior`` needs none;
+    ``lr`` builds spec.lr_context_matrix once per mention and scores
+    each candidate with spec.lr_score_from_matrix (the oracle's
+    np.sum/BLAS order); ``centroid`` runs the batched
+    _centroid_cosines. One spec.score_candidates_batch and one
+    spec.pick_batch lexsort pick every mention's sense.
+    Returns picked_by_row: per row, (begin, end, surface, entity_id,
+    score) in span order."""
+    if score_mode not in spec.SCORE_MODES:
+        raise ValueError(f"unknown score_mode {score_mode!r} (see spec.SCORE_MODES)")
     picked_by_row: list[list] = [[] for _ in tokens_by_row]
-    if not active:
+    eidx, E = evec_pack
+    zero_row = len(eidx)  # missing entity → the trailing zero row of E
+    surf_tmpl: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
+    eidx_parts: list[np.ndarray] = []
+    eid_parts: list[np.ndarray] = []
+    prior_parts: list[np.ndarray] = []
+    cand_counts: list[int] = []
+    meta: list[tuple[int, int, int, str]] = []  # (row_i, begin, end, surface)
+    for row_i, found in enumerate(found_by_row):
+        for begin, end, surface in found:
+            tmpl = surf_tmpl.get(surface)
+            if tmpl is None:
+                senses = gaz[surface]
+                total = sum(s[1] for s in senses)
+                tmpl = (
+                    np.asarray(
+                        [eidx.get(s[0], zero_row) for s in senses],
+                        dtype=np.int64,
+                    ),
+                    np.asarray([s[0] for s in senses], dtype=np.int64),
+                    np.asarray(
+                        [s[1] / total if total else 0.0 for s in senses],
+                        dtype=np.float64,
+                    ),
+                )
+                surf_tmpl[surface] = tmpl
+            eidx_parts.append(tmpl[0])
+            eid_parts.append(tmpl[1])
+            prior_parts.append(tmpl[2])
+            cand_counts.append(len(tmpl[1]))
+            meta.append((row_i, begin, end, surface))
+    if not meta:
         return picked_by_row
+    mid_a = np.repeat(
+        np.arange(len(meta), dtype=np.int64),
+        np.asarray(cand_counts, dtype=np.int64),
+    )
+    eid_a = np.concatenate(eid_parts)
+    prior_a = np.concatenate(prior_parts)
+    vf = vec_fn or _cached_word_vec
+    if score_mode == "centroid":
+        if interned is None:
+            interned = _intern_tokens(tokens_by_row)
+        ctx_a = _centroid_cosines(
+            found_by_row, meta, mid_a, np.concatenate(eidx_parts), E, vf,
+            interned,
+        )
+    elif score_mode == "lr":
+        ctx_a = np.empty(len(eid_a), dtype=np.float64)
+        c = 0
+        for (row_i, begin, end, _surface), n_cand in zip(meta, cand_counts):
+            tokens = tokens_by_row[row_i]
+            mat = spec.lr_context_matrix(tokens[:begin] + tokens[end:], vf)
+            for k in range(c, c + n_cand):
+                ctx_a[k] = spec.lr_score_from_matrix(
+                    mat, spec.entity_vec(evecs, int(eid_a[k]))
+                )
+            c += n_cand
+    else:
+        ctx_a = None  # prior mode scores by the anchor prior alone
+    scores = spec.score_candidates_batch(prior_a, ctx_a, score_mode)
+    for pos in spec.pick_batch(mid_a, eid_a, scores):
+        row_i, begin, end, surface = meta[mid_a[pos]]
+        picked_by_row[row_i].append(
+            (begin, end, surface, int(eid_a[pos]), float(scores[pos]))
+        )
+    return picked_by_row
+
+
+def _centroid_cosines(found_by_row, meta, mid_a, eidx_a, E, vf, interned):
+    """Centroid-mode context score of every (mention, candidate) pair
+    in a few numpy ops instead of 3-4 small numpy calls per mention:
+    intern the batch's distinct context words into one small float64
+    matrix, GATHER the per-mention context rows by integer index
+    (C-speed — stacking ~1M tiny arrays was 2s/100k rows), one
+    sequential segment-fold (spec.seq_segment_sums) per chunk for the
+    centroids, one row-wise cosine for all pairs.
+    Bit-identical to the oracle's per-row spec.centroid/cosine because
+    those are single-segment wrappers of the same batch primitives,
+    gathered rows are the exact float32 word vectors (float64 embedding
+    is exact), and chunking is per-mention (segment math is
+    unaffected). Chunks bound worker memory on long texts."""
     # one C-speed factorize over the batch (shared with detection when
     # the caller passes it in — a python dict.get per word occurrence
     # was ~0.4 s/100k rows)
-    if interned is None:
-        interned = _intern_tokens(tokens_by_row)
     codes, uniques, offsets = interned
     # per-batch word interning: unique word → row in the vector matrix
     # (−1 = OOV under a file-backed store); the float64 conversion and
@@ -244,7 +330,9 @@ def _pick_batch_centroid(
     # reachable from mention-bearing rows, so a sparse-mention batch
     # doesn't vectorize its whole vocabulary (matters for file-backed
     # stores with no process-wide cache)
-    act_rows = np.asarray([a[0] for a in active], dtype=np.int64)
+    act_rows = np.asarray(
+        [i for i, found in enumerate(found_by_row) if found], dtype=np.int64
+    )
     a_start = offsets[act_rows]
     a_len = offsets[act_rows + 1] - a_start
     a_total = int(a_len.sum())
@@ -263,45 +351,6 @@ def _pick_batch_centroid(
             umap[j] = len(wvecs)
             wvecs.append(v)
     idx_flat = umap[codes]
-    # per-surface candidate template: (eidx row, entity id, prior)
-    # arrays computed once per distinct surface in the batch — hot
-    # surfaces repeat constantly, and the prior division is identical
-    # whichever mention triggers it
-    surf_tmpl: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
-    seg_bounds: list[int] = []  # 2 (start,end) segment pairs per mention
-    eidx_parts: list[np.ndarray] = []
-    eid_parts: list[np.ndarray] = []
-    prior_parts: list[np.ndarray] = []
-    cand_counts: list[int] = []
-    meta: list[tuple[int, int, int, str]] = []  # (row_i, begin, end, surface)
-    for row_i, tokens, found in active:
-        o0 = offsets[row_i]
-        o1 = offsets[row_i + 1]
-        for begin, end, surface in found:
-            seg_bounds.extend((o0, o0 + begin, o0 + end, o1))
-            tmpl = surf_tmpl.get(surface)
-            if tmpl is None:
-                senses = gaz[surface]
-                total = sum(s[1] for s in senses)
-                # missing entity → the trailing zero row of E
-                zero_row = len(eidx)
-                tmpl = (
-                    np.asarray(
-                        [eidx.get(s[0], zero_row) for s in senses],
-                        dtype=np.int64,
-                    ),
-                    np.asarray([s[0] for s in senses], dtype=np.int64),
-                    np.asarray(
-                        [s[1] / total if total else 0.0 for s in senses],
-                        dtype=np.float64,
-                    ),
-                )
-                surf_tmpl[surface] = tmpl
-            eidx_parts.append(tmpl[0])
-            eid_parts.append(tmpl[1])
-            prior_parts.append(tmpl[2])
-            cand_counts.append(len(tmpl[1]))
-            meta.append((row_i, begin, end, surface))
     n_mentions = len(meta)
     # vectorized context assembly: every mention's context is two
     # slices of its row's interned-token array ([row start, mention
@@ -310,10 +359,16 @@ def _pick_batch_centroid(
     # and keep per-mention valid counts — zero per-mention numpy calls
     # (both a python-list and a tiny-ndarray-per-mention variant of
     # this loop measured ~2 s/100k rows in small-op overhead)
-    sb = np.asarray(seg_bounds, dtype=np.int64).reshape(-1, 2)
+    rbe = np.asarray([m[:3] for m in meta], dtype=np.int64)
+    o0 = offsets[rbe[:, 0]]
+    sb = np.empty((2 * n_mentions, 2), dtype=np.int64)
+    sb[0::2, 0] = o0
+    sb[0::2, 1] = o0 + rbe[:, 1]
+    sb[1::2, 0] = o0 + rbe[:, 2]
+    sb[1::2, 1] = offsets[rbe[:, 0] + 1]
     seg_lens = sb[:, 1] - sb[:, 0]
     seg_cum = np.cumsum(seg_lens)
-    total_ctx = int(seg_cum[-1]) if seg_lens.size else 0
+    total_ctx = int(seg_cum[-1])
     if total_ctx:
         flat_pos = np.repeat(
             sb[:, 0] - (seg_cum - seg_lens), seg_lens
@@ -335,13 +390,7 @@ def _pick_batch_centroid(
         if wvecs
         else np.zeros((0, spec.EMBED_DIM), dtype=np.float64)
     )
-    mid_a = np.repeat(
-        np.arange(n_mentions, dtype=np.int64),
-        np.asarray(cand_counts, dtype=np.int64),
-    )
-    eid_a = np.concatenate(eid_parts)
-    eidx_a = np.concatenate(eidx_parts)
-    prior_a = np.concatenate(prior_parts)
+    cos = np.empty(len(mid_a), dtype=np.float64)
     vstarts = np.concatenate(([0], np.cumsum(ctx_counts)))
     start = 0
     while start < n_mentions:
@@ -366,55 +415,23 @@ def _pick_batch_centroid(
             W = M[ctx_valid[vstarts[start] : vstarts[end]]]
             starts_c = vstarts[start:end] - vstarts[start]
             cents[mask] = spec.centroid_batch(W, starts_c[mask], counts_c[mask])
-        # candidates of this mention chunk (cand_mid is nondecreasing)
+        # candidates of this mention chunk (mid_a is nondecreasing)
         c0 = int(np.searchsorted(mid_a, start, side="left"))
         c1 = int(np.searchsorted(mid_a, end, side="left"))
-        mid_c = mid_a[c0:c1]
-        eid_c = eid_a[c0:c1]
-        cos = spec.cosine_batch(cents[mid_c - start], E[eidx_a[c0:c1]])
-        scores = spec.score_candidates_batch(prior_a[c0:c1], cos, "centroid")
-        for pos in spec.pick_batch(mid_c, eid_c, scores):
-            m = int(mid_c[pos])
-            row_i, begin, mend, surface = meta[m]
-            picked_by_row[row_i].append(
-                (begin, mend, surface, int(eid_c[pos]), float(scores[pos]))
-            )
+        cos[c0:c1] = spec.cosine_batch(cents[mid_a[c0:c1] - start], E[eidx_a[c0:c1]])
         start = end
-    return picked_by_row
-
-
-def _pick_rows_fallback(
-    tokens_by_row, found_by_row, gaz, evecs, score_mode, vec_fn
-):
-    """Per-row scoring for the prior/lr modes (prior needs no vector
-    math; lr already amortizes via the per-span matrix cache)."""
-    picked_by_row: list[list] = []
-    for tokens, found in zip(tokens_by_row, found_by_row):
-        picked: list = []
-        ctx_cache: dict = {}
-        for begin, end, surface in found:
-            cands = _score_senses(
-                gaz[surface], tokens, begin, end, evecs, score_mode,
-                ctx_cache, vec_fn,
-            )
-            p = spec.pick_sense(cands)
-            if p is not None:
-                picked.append((begin, end, surface, p[0], p[1]))
-        picked_by_row.append(picked)
-    return picked_by_row
+    return cos
 
 
 def _pick_all(
     tokens_by_row, found_by_row, gaz, evecs, score_mode, vec_fn, evec_key,
     interned=None,
 ):
-    if score_mode == "centroid":
-        return _pick_batch_centroid(
-            tokens_by_row, found_by_row, gaz, _evec_pack(evecs, evec_key),
-            vec_fn, interned,
-        )
-    return _pick_rows_fallback(
-        tokens_by_row, found_by_row, gaz, evecs, score_mode, vec_fn
+    """_pick_batch over the broadcast KB (entity-vector pack cached
+    per executor by the evec broadcast id)."""
+    return _pick_batch(
+        tokens_by_row, found_by_row, gaz, evecs, _evec_pack(evecs, evec_key),
+        score_mode, vec_fn, interned,
     )
 
 
@@ -476,62 +493,31 @@ def _link_rows(texts, gaz, evecs, idx, score_mode, vec_fn, evec_key):
     )
 
 
-def _score_senses(senses, tokens, begin, end, evecs, score_mode, ctx_cache, vec_fn=None):
-    """Candidate scores for one mention span, shared by both kernels.
-    Modes (spec.SCORE_MODES): centroid cosine, LR logistic context
-    (LREntityScorer.java:36-50), or prior-only. The per-span ctx cache
-    avoids recomputing the context when a span has many candidates.
-    ``vec_fn`` switches the word-vector source from the built-in
-    pseudo-embedding to a file-backed store (spec.store_vec_fn)."""
-    total = sum(s[1] for s in senses)
-    if score_mode == "prior":
-        return [
-            (eid, spec.score_candidate(occ / total if total else 0.0, 0.0, "prior"))
-            for eid, occ, _doc in senses
-        ]
-    key = (begin, end)
-    if score_mode == "lr":
-        # the (matrix, counts) pair is span-invariant — cache it so k
-        # candidate senses cost k matrix-vector products, not k full
-        # Counter+stack rebuilds
-        mat = ctx_cache.get(key, _MISSING)
-        if mat is _MISSING:
-            mat = spec.lr_context_matrix(
-                tokens[:begin] + tokens[end:], vec_fn or _cached_word_vec
-            )
-            ctx_cache[key] = mat
-        return [
-            (
-                eid,
-                spec.score_candidate(
-                    occ / total if total else 0.0,
-                    spec.lr_score_from_matrix(
-                        mat, spec.entity_vec(evecs, eid)
-                    ),
-                    "lr",
-                ),
-            )
-            for eid, occ, _doc in senses
-        ]
-    if score_mode != "centroid":
-        raise ValueError(f"unknown score_mode {score_mode!r} (see spec.SCORE_MODES)")
-    ctx = ctx_cache.get(key)
-    if ctx is None:
-        # shared-spec centroid (batch-primitive wrapper) with the
-        # executor word-vector cache — identical values either way
-        ctx = spec.centroid(tokens[:begin] + tokens[end:], vec_fn or _cached_word_vec)
-        ctx_cache[key] = ctx
-    return [
-        (
-            eid,
-            spec.score_candidate(
-                occ / total if total else 0.0,
-                spec.cosine(ctx, spec.entity_vec(evecs, eid)),
-                "centroid",
-            ),
-        )
-        for eid, occ, _doc in senses
-    ]
+def linked_frame(picked_by_row, pdf: pd.DataFrame) -> pd.DataFrame:
+    """picked_by_row + the batch's (conv_id, turn_idx, role, tool)
+    columns → one LINKED_SCHEMA frame — the output step shared by the
+    broadcast and shuffle linking kernels."""
+    conv_ids = pdf["conv_id"].tolist()
+    turn_idxs = pdf["turn_idx"].tolist()
+    roles = pdf["role"].tolist()
+    tools = pdf["tool"].tolist()
+    out: dict[str, list] = {
+        "conv_id": [], "turn_idx": [], "role": [], "tool": [],
+        "begin": [], "end": [], "surface": [], "entity_id": [],
+        "score": [],
+    }
+    for i, picked in enumerate(picked_by_row):
+        for begin, end, surface, eid, score in picked:
+            out["conv_id"].append(conv_ids[i])
+            out["turn_idx"].append(turn_idxs[i])
+            out["role"].append(roles[i])
+            out["tool"].append(tools[i])
+            out["begin"].append(begin)
+            out["end"].append(end)
+            out["surface"].append(surface)
+            out["entity_id"].append(eid)
+            out["score"].append(score)
+    return pd.DataFrame(out)
 
 
 def link_mentions(
@@ -564,27 +550,7 @@ def link_mentions(
                 pdf["text"].tolist(), gaz, evecs, idx, score_mode, vec_fn,
                 evec_key,
             )
-            conv_ids = pdf["conv_id"].tolist()
-            turn_idxs = pdf["turn_idx"].tolist()
-            roles = pdf["role"].tolist()
-            tools = pdf["tool"].tolist()
-            out: dict[str, list] = {
-                "conv_id": [], "turn_idx": [], "role": [], "tool": [],
-                "begin": [], "end": [], "surface": [], "entity_id": [],
-                "score": [],
-            }
-            for i, picked in enumerate(picked_by_row):
-                for begin, end, surface, eid, score in picked:
-                    out["conv_id"].append(conv_ids[i])
-                    out["turn_idx"].append(turn_idxs[i])
-                    out["role"].append(roles[i])
-                    out["tool"].append(tools[i])
-                    out["begin"].append(begin)
-                    out["end"].append(end)
-                    out["surface"].append(surface)
-                    out["entity_id"].append(eid)
-                    out["score"].append(score)
-            yield pd.DataFrame(out)
+            yield linked_frame(picked_by_row, pdf)
 
     # guide §4: ship ONLY the columns the kernel reads (mapInPandas is
     # opaque to Catalyst's pruning — without the select, unused input
@@ -598,6 +564,70 @@ def link_mentions(
 
 
 TRIPLES_SCHEMA = "conv_id string, turn_idx int, subj long, pred string, obj string"
+
+# the window carry before a partition's or a conversation's first turn
+NO_WINDOW = (None, None, frozenset())
+
+
+def emit_window_triples(
+    picked_by_row, conv_ids, turn_idxs, roles, tools, canon, carry
+):
+    """The one turn-window triple rule of the Python kernels
+    (link_and_extract and the streaming processor; the staged path's
+    JVM twin is triples.extract_triples, the oracle's own copy is
+    oracle.run_oracle). Rows arrive turn-ordered per conversation; per
+    turn t with canonical entity set E_t:
+
+    - (e, 'mentioned_by', role) and, on tool turns,
+      (e, 'used_with_tool', tool) for every e in E_t;
+    - (a, 'co_occurs_with', b), a < b, over W_t = E_{t-1} ∪ E_t when
+      a or b is in E_t.
+
+    E_{t-1} is the previous row's set only when that row is turn t−1
+    of the same conversation; a new conversation or a turn_idx gap
+    resets the window. ``carry`` = (conv_id, turn_idx, entity set) of
+    the last row seen, so the window survives Arrow-batch and
+    micro-batch boundaries. Returns (TRIPLES_SCHEMA frame, carry)."""
+    prev_conv, prev_turn, prev_set = carry
+    # bound-method locals: the emit path appends ~3 triples per turn ×
+    # 5 columns — a closure call + dict lookup per emit was ~25% of
+    # kernel time in the r8 profile
+    o_conv: list = []
+    o_turn: list = []
+    o_subj: list = []
+    o_pred: list = []
+    o_obj: list = []
+    ap_c, ap_t, ap_s = o_conv.append, o_turn.append, o_subj.append
+    ap_p, ap_o = o_pred.append, o_obj.append
+    canon_get = canon.get
+    for i, picked in enumerate(picked_by_row):
+        cid = conv_ids[i]
+        tix = turn_idxs[i]
+        if cid != prev_conv or tix - 1 != prev_turn:
+            prev_set = frozenset()
+        cur = {canon_get(p[3], p[3]) for p in picked}
+        tool = tools[i]
+        if tool is not None and tool != tool:  # NaN guard
+            tool = None
+        role = roles[i]
+        for e in sorted(cur):
+            ap_c(cid), ap_t(tix), ap_s(e)
+            ap_p("mentioned_by"), ap_o(role)
+            if tool is not None:
+                ap_c(cid), ap_t(tix), ap_s(e)
+                ap_p("used_with_tool"), ap_o(tool)
+        window = sorted(cur | prev_set)
+        for j, a in enumerate(window):
+            for b in window[j + 1 :]:
+                if a in cur or b in cur:
+                    ap_c(cid), ap_t(tix), ap_s(a)
+                    ap_p("co_occurs_with"), ap_o(str(b))
+        prev_conv, prev_turn, prev_set = cid, tix, cur
+    out = pd.DataFrame(
+        {"conv_id": o_conv, "turn_idx": o_turn, "subj": o_subj,
+         "pred": o_pred, "obj": o_obj}
+    )
+    return out, (prev_conv, prev_turn, prev_set)
 
 
 def link_and_extract(
@@ -615,18 +645,18 @@ def link_and_extract(
     The repartition(conv_id) + sortWithinPartitions(turn_idx) layout
     guarantees each conversation arrives contiguous and turn-ordered
     inside its partition, so the 2-turn window is a running carry
-    (prev conv_id / prev entity set) held ACROSS pandas batches of the
-    same partition — no groupBy, no window shuffle, no explode. After
-    the single layout shuffle, triple extraction is embarrassingly
+    (emit_window_triples) held ACROSS pandas batches of the same
+    partition — no groupBy, no window shuffle, no explode. After the
+    single layout shuffle, triple extraction is embarrassingly
     parallel, which is grisp's own architecture (everything map-side
     against broadcast caches, README.md:9) and the reason the job
     scales linearly at 10^12 turns.
 
-    Semantics are bit-identical to the staged path
+    Semantics are identical to the staged path
     (link_mentions → canonicalize.rewrite_linked →
     triples.extract_triples); tests assert all three agree with the
     reference oracle. ``canon_bc`` broadcasts {entity_id:
-    canonical_id} from canonicalize.canonical_map."""
+    canonical_id} (build_kb_broadcasts)."""
     n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
 
     # driver-side stable broadcast ids, captured into the closure
@@ -639,55 +669,18 @@ def link_and_extract(
         canon = canon_bc.value
         vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
         idx = _first_token_index(gaz, cache_key)
-        prev_conv: str | None = None
-        prev_set: set[int] = set()
+        carry = NO_WINDOW
         for pdf in batches:
             picked_by_row = _link_rows(
                 pdf["text"].tolist(), gaz, evecs, idx, score_mode, vec_fn,
                 evec_key,
             )
-            conv_ids = pdf["conv_id"].tolist()
-            turn_idxs = pdf["turn_idx"].tolist()
-            roles = pdf["role"].tolist()
-            tools = pdf["tool"].tolist()
-            # bound-method locals: the emit path appends ~3 triples per
-            # turn × 5 columns — a closure call + dict lookup per emit
-            # was ~25% of kernel time in the r8 profile
-            o_conv: list = []
-            o_turn: list = []
-            o_subj: list = []
-            o_pred: list = []
-            o_obj: list = []
-            ap_c, ap_t, ap_s = o_conv.append, o_turn.append, o_subj.append
-            ap_p, ap_o = o_pred.append, o_obj.append
-            canon_get = canon.get
-            for i, picked in enumerate(picked_by_row):
-                cid = conv_ids[i]
-                tix = turn_idxs[i]
-                if cid != prev_conv:
-                    prev_conv, prev_set = cid, set()
-                cur = {canon_get(p[3], p[3]) for p in picked}
-                tool = tools[i]
-                if tool is not None and tool != tool:  # NaN guard
-                    tool = None
-                role = roles[i]
-                for e in sorted(cur):
-                    ap_c(cid), ap_t(tix), ap_s(e)
-                    ap_p("mentioned_by"), ap_o(role)
-                    if tool is not None:
-                        ap_c(cid), ap_t(tix), ap_s(e)
-                        ap_p("used_with_tool"), ap_o(tool)
-                window = sorted(prev_set | cur)
-                for j, a in enumerate(window):
-                    for b in window[j + 1 :]:
-                        if a in cur or b in cur:
-                            ap_c(cid), ap_t(tix), ap_s(a)
-                            ap_p("co_occurs_with"), ap_o(str(b))
-                prev_set = cur
-            yield pd.DataFrame(
-                {"conv_id": o_conv, "turn_idx": o_turn, "subj": o_subj,
-                 "pred": o_pred, "obj": o_obj}
+            out, carry = emit_window_triples(
+                picked_by_row, pdf["conv_id"].tolist(),
+                pdf["turn_idx"].tolist(), pdf["role"].tolist(),
+                pdf["tool"].tolist(), canon, carry,
             )
+            yield out
 
     # guide §4: only the kernel's input columns cross the Arrow
     # boundary (ts in particular never did anything but serialize)

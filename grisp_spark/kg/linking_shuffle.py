@@ -17,9 +17,12 @@ linked-mention rows with the KB kept DISTRIBUTED end to end:
    equi-join them against the per-label sense table (sort-merge at
    scale — uniform string keys, AQE handles residual skew);
 4. re-group matched spans per turn and resolve the greedy
-   longest-match-first non-overlap rule + candidate scoring in one
-   Arrow kernel, reusing the EXACT spec/_score_senses primitives the
-   broadcast path uses — parity is structural, not re-implemented.
+   longest-match-first non-overlap rule in one Arrow kernel, which
+   hands the picked spans, a batch-local {surface: senses} slice and
+   an entity-vector pack of the batch's candidates to
+   ``linking._pick_batch`` — the same batch scorer the broadcast path
+   runs, so parity is structural, not re-implemented, and the
+   per-turn scoring cost is the broadcast regime's.
 
 Entity context vectors are computed distributed too (mapInPandas over
 the entities table) and ride the sense table as float32 arrays, so no
@@ -230,68 +233,47 @@ def link_mentions_shuffle(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
         for pdf in batches:
-            out: dict[str, list] = {
-                "conv_id": [], "turn_idx": [], "role": [], "tool": [],
-                "begin": [], "end": [], "surface": [], "entity_id": [],
-                "score": [],
-            }
-            # bare column lists, not itertuples (the r8 kernel rule:
-            # row tuples materialize every cell per row)
-            for r_conv, r_turn, r_role, r_tool, r_tokens, r_spans in zip(
-                pdf["conv_id"].tolist(), pdf["turn_idx"].tolist(),
-                pdf["role"].tolist(), pdf["tool"].tolist(),
-                pdf["tokens"].tolist(), pdf["spans"].tolist(),
-            ):
-                tokens = list(r_tokens)
+            tokens_by_row = [list(t) for t in pdf["tokens"].tolist()]
+            # batch-local KB slice: the senses (and entity vectors) of
+            # every surface that matched in this batch — exactly the
+            # entries of the broadcast gazetteer the spans touch
+            gaz: dict[str, list] = {}
+            evecs: dict[int, np.ndarray] = {}
+            found_by_row = []
+            for tokens, spans in zip(tokens_by_row, pdf["spans"].tolist()):
                 by_begin: dict[int, dict] = {}
-                for sp in r_spans:
+                for sp in spans:
                     cur = by_begin.get(sp["begin"])
                     if cur is None or sp["end"] > cur["end"]:
                         by_begin[sp["begin"]] = sp
                 # greedy longest-match-first, left to right — the same
                 # region rule as spec.detect_mentions (Util.java:39-76)
-                picked_spans = []
+                found = []
                 i, n = 0, len(tokens)
                 while i < n:
                     sp = by_begin.get(i)
-                    if sp is not None:
-                        picked_spans.append(sp)
-                        i = sp["end"]
-                    else:
+                    if sp is None:
                         i += 1
-                ctx_cache: dict = {}
-                for sp in picked_spans:
-                    senses_l = [
-                        (int(s["entity_id"]), int(s["link_occ"]), int(s["link_doc"]))
-                        for s in sp["senses"]
-                    ]
-                    evecs_l = (
-                        {
-                            int(s["entity_id"]): np.asarray(
-                                s["vec"], dtype=np.float32
-                            )
-                            for s in sp["senses"]
-                        }
-                        if score_mode != "prior"
-                        else {}
-                    )
-                    cands_scored = linking._score_senses(
-                        senses_l, tokens, sp["begin"], sp["end"], evecs_l,
-                        score_mode, ctx_cache, vec_fn,
-                    )
-                    p = spec.pick_sense(cands_scored)
-                    if p is None:
                         continue
-                    out["conv_id"].append(r_conv)
-                    out["turn_idx"].append(r_turn)
-                    out["role"].append(r_role)
-                    out["tool"].append(r_tool)
-                    out["begin"].append(sp["begin"])
-                    out["end"].append(sp["end"])
-                    out["surface"].append(sp["surface"])
-                    out["entity_id"].append(p[0])
-                    out["score"].append(p[1])
-            yield pd.DataFrame(out)
+                    surface = sp["surface"]
+                    if surface not in gaz:
+                        gaz[surface] = [
+                            (int(s["entity_id"]), int(s["link_occ"]), int(s["link_doc"]))
+                            for s in sp["senses"]
+                        ]
+                        if score_mode != "prior":
+                            for s in sp["senses"]:
+                                evecs[int(s["entity_id"])] = np.asarray(
+                                    s["vec"], dtype=np.float32
+                                )
+                    found.append((i, sp["end"], surface))
+                    i = sp["end"]
+                found_by_row.append(found)
+            picked_by_row = linking._pick_batch(
+                tokens_by_row, found_by_row, gaz, evecs,
+                linking._build_evec_pack(evecs), score_mode, vec_fn,
+            )
+            yield linking.linked_frame(picked_by_row, pdf)
 
     return turn_frame.mapInPandas(run, schema=LINKED_SCHEMA)
 

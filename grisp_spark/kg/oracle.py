@@ -125,11 +125,14 @@ def run_oracle(
     link_occ: dict[tuple[str, int], int] = defaultdict(int)
     link_doc_sets: dict[tuple[str, int], set[str]] = defaultdict(set)
 
-    prev_conv = None
+    prev_conv = prev_turn = None
     prev_set: set[int] = set()
     for row in conv_sorted.itertuples(index=False):
-        if row.conv_id != prev_conv:
-            prev_conv, prev_set = row.conv_id, set()
+        # the window holds the previous turn's entities only when that
+        # turn is turn_idx − 1 of the same conversation: a new
+        # conversation or a turn_idx gap starts an empty window
+        if row.conv_id != prev_conv or int(row.turn_idx) - 1 != prev_turn:
+            prev_set = set()
         tokens = spec.tokenize(row.text or "")
         found = spec.detect_mentions(tokens, gaz, idx)
         cur_set: set[int] = set()
@@ -186,7 +189,7 @@ def run_oracle(
                     triples.add(
                         (row.conv_id, int(row.turn_idx), a, "co_occurs_with", str(b))
                     )
-        prev_set = cur_set
+        prev_conv, prev_turn, prev_set = row.conv_id, int(row.turn_idx), cur_set
 
     label_stats_rows = []
     for surface in sorted(text_occ):

@@ -348,10 +348,11 @@ def entity_vec(evecs: dict, eid: int):
     """Entity vector with the referential-integrity default: a sense
     whose entity_id has no entities row scores with the ZERO vector
     (centroid()'s empty-vocab result). The ONE definition shared by
-    every scoring path — broadcast kernel (_evec_pack's trailing zero
-    row gathers to this value), shuffle path (left-join + coalesce to
-    the zero array), streaming state kernel, and the oracle — so a
-    KB with dangling entity_ids cannot fork the semantics."""
+    every scoring path — the kernels' batch picker (lr mode calls it;
+    centroid mode gathers _build_evec_pack's trailing zero row, the
+    same value), the shuffle path's sense table (left-join + coalesce
+    to the zero array) and the oracle — so a KB with dangling
+    entity_ids cannot fork the semantics."""
     v = evecs.get(eid)
     return v if v is not None else ZERO_VEC
 

@@ -16,10 +16,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def count_exchanges(df: DataFrame, kind: str = "") -> int:
     """Number of Exchange operators; kind narrows to e.g.
     'hashpartitioning' / 'rangepartitioning'."""

@@ -469,7 +469,7 @@ def kg08_linked_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship's linking stage with its SCORES in the output:
     every centroid cosine + prior + argmax pick is hash-checked
     against the DuckDB replay (float-level certification of the
-    context-scoring kernel, kg/linking.py::_pick_batch_centroid —
+    context-scoring kernel, kg/linking.py::_centroid_cosines —
     triples alone would only certify the picks)."""
     from grisp_spark.kg import linking
 
@@ -616,6 +616,8 @@ def _staged_triples(
     import os
     import shutil
 
+    import pyarrow as pa
+
     from grisp_spark.kg.pipeline import KGPipeline
 
     conv, kb = _centroid_corpus_kb(spark, sf_dir)
@@ -632,10 +634,18 @@ def _staged_triples(
     for name, df in kb.items():
         df.write.mode("overwrite").parquet(os.path.join(data_dir, f"{name}.parquet"))
     # the bootstrap KB has no alias table; the pipeline contract reads
-    # one, so stage an empty frame with the datagen schema
-    spark.createDataFrame(
-        [], "alias string, entity_id long, kind string, chain_hops int"
-    ).write.mode("overwrite").parquet(os.path.join(data_dir, "aliases.parquet"))
+    # one, so stage an empty frame with the datagen schema. It goes in
+    # as an empty Arrow table: that plans as a LocalTableScan, while an
+    # empty list (or an empty pandas frame, which skips Arrow) builds
+    # a PythonRDD whose tasks fork pickle-mode python workers (the
+    # closure.py driver-path rule)
+    aliases = pa.schema(
+        [("alias", pa.string()), ("entity_id", pa.int64()),
+         ("kind", pa.string()), ("chain_hops", pa.int32())]
+    ).empty_table()
+    spark.createDataFrame(aliases).write.mode("overwrite").parquet(
+        os.path.join(data_dir, "aliases.parquet")
+    )
     result = KGPipeline(
         spark, data_dir, out_dir, n_buckets=4, **pipeline_kwargs
     ).run(resume=False)

@@ -84,9 +84,3 @@ def _warm_collation_support(spark: SparkSession) -> None:
         return
     spark.sql("SELECT initcap('warm')").collect()
     _COLLATION_WARMED = True
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

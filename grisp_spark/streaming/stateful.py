@@ -4,9 +4,12 @@ triple extraction with applyInPandasWithState.
 The batch pipeline's 2-turn window becomes keyed streaming state: for
 each conv_id, the state holds (last turn_idx, last entity set), so
 triples emit incrementally as turns arrive — the Structured-Streaming
-twin of the fused map-side batch path (linking.link_and_extract),
-sharing the same spec primitives. State times out after idle_minutes
-of event time past the watermark."""
+twin of the fused map-side batch path (linking.link_and_extract). Each
+state group's turns go through the same kernel: linking._link_rows
+(tokenize → detect → the batch scorer) and
+linking.emit_window_triples, seeded with the group's state as the
+window carry — so a turn that is not the stored turn + 1 starts a new
+window, exactly as in the batch paths."""
 
 from __future__ import annotations
 
@@ -15,8 +18,6 @@ from collections.abc import Iterable, Iterator
 import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from grisp_spark.kg import spec
-
 OUTPUT_SCHEMA = "conv_id string, turn_idx int, subj long, pred string, obj string"
 STATE_SCHEMA = "last_turn int, ents array<long>"
 
@@ -24,86 +25,45 @@ STATE_SCHEMA = "last_turn int, ents array<long>"
 def make_processor(gaz_bc, evec_bc, canon_bc):
     """Returns the applyInPandasWithState function closed over the
     broadcast KB structures."""
-    from grisp_spark.kg.linking import _cached_word_vec, _first_token_index
+    from grisp_spark.kg import linking
 
-    # driver-side stable broadcast id — the executor-local index cache
-    # key (process() is invoked once PER CONVERSATION GROUP per
-    # micro-batch; rebuilding the first-token index each time would
-    # scan the whole gazetteer per group)
+    # driver-side stable broadcast ids — the executor-local index and
+    # entity-vector pack cache keys (process() is invoked once PER
+    # CONVERSATION GROUP per micro-batch; rebuilding either each time
+    # would scan the whole KB per group)
     cache_key = gaz_bc._jbroadcast.id()
+    evec_key = evec_bc._jbroadcast.id()
 
     def process(
         key: tuple,
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        gaz = gaz_bc.value
-        evecs = evec_bc.value
-        canon = canon_bc.value
-        idx = _first_token_index(gaz, cache_key)
-        (conv_id,) = key
-        if state.exists:
-            last_turn, prev_list = state.get
-            prev_set = set(prev_list)
-        else:
-            last_turn, prev_set = -1, set()
-
         batches = list(pdfs)
         if not batches:  # timeout-only invocation: nothing to emit
             yield pd.DataFrame(
                 {"conv_id": [], "turn_idx": [], "subj": [], "pred": [], "obj": []}
             )
             return
+        gaz = gaz_bc.value
+        (conv_id,) = key
+        if state.exists:
+            last_turn, prev_list = state.get
+            carry = (conv_id, last_turn, set(prev_list))
+        else:
+            carry = linking.NO_WINDOW
         rows = pd.concat(batches, ignore_index=True).sort_values("turn_idx")
-        out = {"conv_id": [], "turn_idx": [], "subj": [], "pred": [], "obj": []}
-
-        def emit(turn_idx, subj, pred, obj):
-            out["conv_id"].append(conv_id)
-            out["turn_idx"].append(turn_idx)
-            out["subj"].append(subj)
-            out["pred"].append(pred)
-            out["obj"].append(obj)
-
-        for row in rows.itertuples(index=False):
-            if row.turn_idx != last_turn + 1:
-                prev_set = set()  # gap: window resets (late/ooo turn)
-            tokens = spec.tokenize(row.text or "")
-            cur: set[int] = set()
-            for begin, end, surface in spec.detect_mentions(tokens, gaz, idx):
-                senses = gaz[surface]
-                total = sum(s[1] for s in senses)
-                # executor word-vector cache: uncached spec.word_vec
-                # re-derives the RNG vector per context word (~10x)
-                ctx = spec.centroid(tokens[:begin] + tokens[end:], _cached_word_vec)
-                picked = spec.pick_sense(
-                    [
-                        (
-                            eid,
-                            spec.score_candidate(
-                                occ / total if total else 0.0,
-                                spec.cosine(ctx, spec.entity_vec(evecs, eid)),
-                            ),
-                        )
-                        for eid, occ, _doc in senses
-                    ]
-                )
-                if picked is not None:
-                    cur.add(canon.get(picked[0], picked[0]))
-            tool = None if (row.tool is None or row.tool != row.tool) else row.tool
-            for e in sorted(cur):
-                emit(row.turn_idx, e, "mentioned_by", row.role)
-                if tool is not None:
-                    emit(row.turn_idx, e, "used_with_tool", tool)
-            window = sorted(prev_set | cur)
-            for i, a in enumerate(window):
-                for b in window[i + 1 :]:
-                    if a in cur or b in cur:
-                        emit(row.turn_idx, a, "co_occurs_with", str(b))
-            prev_set = cur
-            last_turn = int(row.turn_idx)
-
+        picked_by_row = linking._link_rows(
+            rows["text"].tolist(), gaz, evec_bc.value,
+            linking._first_token_index(gaz, cache_key), "centroid", None,
+            evec_key,
+        )
+        out, (_conv, last_turn, prev_set) = linking.emit_window_triples(
+            picked_by_row, rows["conv_id"].tolist(), rows["turn_idx"].tolist(),
+            rows["role"].tolist(), rows["tool"].tolist(), canon_bc.value, carry,
+        )
         state.update((last_turn, sorted(prev_set)))
-        yield pd.DataFrame(out)
+        yield out
 
     return process
 

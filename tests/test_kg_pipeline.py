@@ -205,15 +205,14 @@ def test_fused_matches_staged_and_oracle(spark, dataset, pipeline_result, oracle
     """The fused map-side path (one Arrow pass, no post-layout
     shuffles) must emit the identical triple set as the staged
     resumable path and the oracle."""
-    from grisp_spark.kg import canonicalize, linking
+    from grisp_spark.kg import linking
 
     conv = spark.read.parquet(os.path.join(dataset, "conversations.parquet"))
     kb = {
         n: spark.read.parquet(os.path.join(dataset, f"{n}.parquet"))
         for n in ("entities", "aliases", "label_stats")
     }
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
-    canon_bc = canonicalize.canonical_map_broadcast(spark, kb["entities"])
+    gaz_bc, evec_bc, canon_bc = linking.build_kb_broadcasts(spark, kb)
     fused = linking.link_and_extract(conv, gaz_bc, evec_bc, canon_bc, 8)
     got = _triples_set(fused)
     assert got == _triples_set(pipeline_result["triples"])
@@ -223,15 +222,14 @@ def test_fused_matches_staged_and_oracle(spark, dataset, pipeline_result, oracle
 def test_fused_batch_straddling(spark, dataset):
     """Window carry must survive pandas-batch boundaries: force
     2-row Arrow batches so every conversation straddles batches."""
-    from grisp_spark.kg import canonicalize, linking
+    from grisp_spark.kg import linking
 
     conv = spark.read.parquet(os.path.join(dataset, "conversations.parquet"))
     kb = {
         n: spark.read.parquet(os.path.join(dataset, f"{n}.parquet"))
         for n in ("entities", "aliases", "label_stats")
     }
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
-    canon_bc = canonicalize.canonical_map_broadcast(spark, kb["entities"])
+    gaz_bc, evec_bc, canon_bc = linking.build_kb_broadcasts(spark, kb)
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
@@ -252,15 +250,14 @@ def test_lr_scoring_mode_parity(spark, dataset):
     in the same mode."""
     import pandas as pd
 
-    from grisp_spark.kg import canonicalize, linking, oracle
+    from grisp_spark.kg import linking, oracle
 
     kb_df = {
         n: spark.read.parquet(os.path.join(dataset, f"{n}.parquet"))
         for n in ("entities", "aliases", "label_stats")
     }
     conv = spark.read.parquet(os.path.join(dataset, "conversations.parquet"))
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb_df)
-    canon_bc = canonicalize.canonical_map_broadcast(spark, kb_df["entities"])
+    gaz_bc, evec_bc, canon_bc = linking.build_kb_broadcasts(spark, kb_df)
     got = _triples_set(
         linking.link_and_extract(conv, gaz_bc, evec_bc, canon_bc, 8, score_mode="lr")
     )
@@ -282,7 +279,7 @@ def test_file_backed_vector_store_parity(spark, dataset):
     import numpy as np
     import pandas as pd
 
-    from grisp_spark.kg import canonicalize, linking, oracle, spec
+    from grisp_spark.kg import linking, oracle, spec
 
     kb_pd = {
         n: pd.read_parquet(os.path.join(dataset, f"{n}.parquet"))
@@ -311,8 +308,7 @@ def test_file_backed_vector_store_parity(spark, dataset):
         for n in ("entities", "aliases", "label_stats")
     }
     conv = spark.read.parquet(os.path.join(dataset, "conversations.parquet"))
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb_df, wvec_bc)
-    canon_bc = canonicalize.canonical_map_broadcast(spark, kb_df["entities"])
+    gaz_bc, evec_bc, canon_bc = linking.build_kb_broadcasts(spark, kb_df, wvec_bc)
     got = _triples_set(
         linking.link_and_extract(conv, gaz_bc, evec_bc, canon_bc, 8, wvec_bc=wvec_bc)
     )

@@ -56,19 +56,28 @@ def test_adaptive_picks_shuffle_above_threshold(spark, corpus):
     assert _rows(small) == _rows(big)
 
 
+def _canonical_dict(entities):
+    """{entity_id: canonical_id} collected from the distributed
+    connected components (canonicalize.canonical_map)."""
+    return {
+        int(r.entity_id): int(r.canonical_id)
+        for r in canonicalize.canonical_map(entities).collect()
+    }
+
+
 def test_fused_builder_matches_separate(spark, corpus):
     """build_kb_broadcasts (one entities collection + driver-side
-    union-find) must produce the same gazetteer, vectors, and
-    canonical map as build_broadcasts + canonical_map_broadcast —
-    including over the datagen corpus's 2-3-hop redirect chains."""
+    union-find) must produce the same gazetteer and vectors as
+    build_broadcasts, and the same canonical map as the distributed
+    canonicalize.canonical_map — including over the datagen corpus's
+    2-3-hop redirect chains."""
     conv, kb = corpus
     gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
-    canon_bc = canonicalize.canonical_map_broadcast(spark, kb["entities"])
     g2, e2, c2 = linking.build_kb_broadcasts(spark, kb)
     assert g2.value == gaz_bc.value
     assert set(e2.value) == set(evec_bc.value)
     assert all((e2.value[k] == evec_bc.value[k]).all() for k in e2.value)
-    assert c2.value == canon_bc.value
+    assert c2.value == _canonical_dict(kb["entities"])
     assert any(k != v for k, v in c2.value.items()), (
         "corpus must exercise non-identity canonicalization"
     )
@@ -167,7 +176,7 @@ def test_kb_broadcasts_ids_above_2_53(spark):
     assert c2.value[7] == 7
     assert set(e2.value) == {big + 3, big + 1, 7}
     # exact agreement with the Spark-side (never-float) canonical map
-    assert c2.value == canonicalize.canonical_map_broadcast(spark, ents).value
+    assert c2.value == _canonical_dict(ents)
 
 
 def test_adaptive_flip_triples_parity(spark, corpus):
@@ -234,8 +243,7 @@ def test_shuffle_path_feeds_staged_pipeline(spark, corpus):
     from grisp_spark.kg.triples import extract_triples
 
     conv, kb = corpus
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
-    canon_bc = canonicalize.canonical_map_broadcast(spark, kb["entities"])
+    gaz_bc, evec_bc, canon_bc = linking.build_kb_broadcasts(spark, kb)
     fused = linking.link_and_extract(conv, gaz_bc, evec_bc, canon_bc, 8)
 
     linked = linking_shuffle.link_mentions_shuffle(conv, kb, 8)
@@ -251,7 +259,7 @@ def test_shuffle_path_feeds_staged_pipeline(spark, corpus):
 
 def test_centroid_chunking_invariance(spark, corpus, monkeypatch):
     """Scoring-chunk boundaries (the worker-memory cap in
-    _pick_batch_centroid) must not change a single float: chunking is
+    linking._centroid_cosines) must not change a single float: chunking is
     per-mention, each mention is one contiguous segment, and
     spec.seq_segment_sums' fold is segment-local. Force pathologically
     tiny chunks and require row identity with the default."""

@@ -5,7 +5,7 @@ carries the 2-turn window across micro-batches per conversation)."""
 import os
 import shutil
 
-from grisp_spark.kg import canonicalize, datagen, linking
+from grisp_spark.kg import datagen, linking
 from grisp_spark.streaming import ingest, stateful
 
 DATA = "/root/repo/.data/stateful_test"
@@ -23,8 +23,7 @@ def test_stateful_matches_batch(spark):
         n: spark.read.parquet(os.path.join(DATA, "kb", f"{n}.parquet"))
         for n in ("entities", "aliases", "label_stats")
     }
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
-    canon_bc = canonicalize.canonical_map_broadcast(spark, kb["entities"])
+    gaz_bc, evec_bc, canon_bc = linking.build_kb_broadcasts(spark, kb)
 
     stream = ingest.stream_conversations(spark, in_dir)
     triples_stream = stateful.streaming_triples(stream, gaz_bc, evec_bc, canon_bc)
@@ -69,8 +68,7 @@ def test_stateful_dangling_entity(spark):
     # entity 0 is the planted hot entity — dropping it guarantees
     # dangling senses that actually match text
     dirty = {**kb, "entities": kb["entities"].filter("entity_id != 0")}
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, dirty)
-    canon_bc = canonicalize.canonical_map_broadcast(spark, dirty["entities"])
+    gaz_bc, evec_bc, canon_bc = linking.build_kb_broadcasts(spark, dirty)
 
     stream = ingest.stream_conversations(spark, in_dir)
     triples_stream = stateful.streaming_triples(stream, gaz_bc, evec_bc, canon_bc)
