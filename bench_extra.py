@@ -8,6 +8,8 @@ Modes:
   python bench_extra.py --plans out_dir  # write explain('formatted')
                                          # for every headline query
   python bench_extra.py --all            # every declared query, 1 pass
+  python bench_extra.py --task-overhead  # fixed per-task cost of a
+                                         # JVM-only vs Python stage
 
 Protocol mirrors bench.py (same warmups, same noop sink, same
 local[$SPARK_GRAFT_CPUS] master, same $SPARK_GRAFT_SF_DIR data) but
@@ -56,13 +58,61 @@ def _session():
     return spark
 
 
+def _py_noop(batches):
+    # Unpickling any grisp kernel imports the package on the worker;
+    # do the same, so the no-op job pays what a kernel task pays.
+    import grisp_spark  # noqa: F401
+
+    yield from batches
+
+
+def task_overhead(passes: int) -> dict:
+    """Median wall ms over ``passes`` (after 3 warm-ups) of no-op jobs
+    that differ only in whether a Python worker runs the stage: a
+    JVM-only 4-partition job, and 4- and 16-partition ``mapInArrow``
+    identity jobs. The jobs move 1 row per partition, so the Python
+    legs measure the fixed cost each task pays before kernel code
+    runs."""
+    from grisp_spark.session import get_spark
+
+    spark = get_spark(
+        "bench_extra", cores=CPUS,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    jobs = {
+        "jvm_noop_4p_ms": lambda: spark.range(4, numPartitions=4),
+        "py_noop_4p_ms": lambda: spark.range(4, numPartitions=4)
+        .mapInArrow(_py_noop, "id long"),
+        "py_noop_16p_ms": lambda: spark.range(16, numPartitions=16)
+        .mapInArrow(_py_noop, "id long"),
+    }
+    out = {}
+    for key, make in jobs.items():
+        for _ in range(3):
+            _noop(make())
+        secs = []
+        for _ in range(passes):
+            t0 = time.perf_counter()
+            _noop(make())
+            secs.append(time.perf_counter() - t0)
+        secs.sort()
+        out[key] = round(1000 * secs[len(secs) // 2], 1)
+    out.update(passes=passes, warmups=3, cores=CPUS)
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", default=None)
     ap.add_argument("--passes", type=int, default=3)
     ap.add_argument("--plans", default=None, metavar="DIR")
     ap.add_argument("--all", action="store_true")
+    ap.add_argument("--task-overhead", action="store_true")
     args = ap.parse_args()
+
+    if args.task_overhead:
+        print(json.dumps(task_overhead(max(args.passes, 5))), flush=True)
+        return
 
     import __spark_entry__ as entry_mod
     import bench as bench_mod

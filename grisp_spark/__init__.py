@@ -15,4 +15,37 @@ pandas/Arrow UDFs only where built-in functions cannot express the
 semantics (trie-based mention detection, numpy embedding scoring).
 """
 
+import os
+import sys
+import zipimport
+
 __version__ = "0.1.0"
+
+# PySpark's worker calls importlib.invalidate_caches() at the start of
+# EVERY task (worker_util.setup_spark_files). Before CPython 3.13 that
+# makes each zipimporter in sys.path_importer_cache re-read its
+# archive's central directory — pyspark.zip, py4j and the spark-core
+# jar, ~27k entries, ~170 ms per task — although nothing changed.
+# Re-read only when the archive's (mtime, size) moved. Installed here
+# because every worker that unpickles a grisp kernel imports this
+# package; 3.13 made the invalidation lazy, so drop this block once
+# the worker Python is >= 3.13.
+if sys.version_info < (3, 13):
+    _zip_stamps: dict[str, tuple[int, int] | None] = {}
+
+    def _invalidate_if_changed(
+        self, _reread=zipimport.zipimporter.invalidate_caches
+    ):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        files = zipimport._zip_directory_cache.get(self.archive)
+        if stamp is None or files is None or _zip_stamps.get(self.archive) != stamp:
+            _reread(self)
+            _zip_stamps[self.archive] = stamp
+        else:
+            self._files = files  # the latest read, by any importer of the archive
+
+    zipimport.zipimporter.invalidate_caches = _invalidate_if_changed

@@ -105,8 +105,12 @@ def _collect_gazetteer(kb: dict[str, DataFrame]) -> dict:
 
 def _evecs_from_ents(ents: pd.DataFrame, wvec_bc=None) -> dict:
     """(entity_id, context_vocab) pandas frame → {id: centroid vector}
-    — shared by both broadcast builders."""
-    vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
+    — shared by both broadcast builders. The pseudo-embedding goes
+    through the kernels' word-vector memo, so repeated KB builds in
+    one driver reuse it."""
+    vec_fn = (
+        spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else _cached_word_vec
+    )
     return {
         int(r.entity_id): spec.centroid(list(r.context_vocab), vec_fn)
         for r in ents.itertuples(index=False)

@@ -74,13 +74,15 @@ def get_spark(
 # one constant initcap at session build so the load happens once, off
 # every query's timed path. Local mode shares one JVM between driver
 # and executors, so this covers both; on a real cluster each long-lived
-# executor JVM pays the load once, amortized over the job.
-_COLLATION_WARMED = False
+# executor JVM pays the load once, amortized over the job. The load
+# lives in the JVM, not in this process, so the guard is keyed by the
+# running application: a session started after a stop is warmed again.
+_COLLATION_WARMED: set[str] = set()
 
 
 def _warm_collation_support(spark: SparkSession) -> None:
-    global _COLLATION_WARMED
-    if _COLLATION_WARMED:
+    app_id = spark.sparkContext.applicationId
+    if app_id in _COLLATION_WARMED:
         return
     spark.sql("SELECT initcap('warm')").collect()
-    _COLLATION_WARMED = True
+    _COLLATION_WARMED.add(app_id)
