@@ -10,6 +10,10 @@ Modes:
   python bench_extra.py --all            # every declared query, 1 pass
   python bench_extra.py --task-overhead  # fixed per-task cost of a
                                          # JVM-only vs Python stage
+  python bench_extra.py --kb-build       # driver KB build (collect,
+                                         # gazetteer, vectors, canon,
+                                         # broadcast) at 120 and 20k
+                                         # datagen entities
 
 Protocol mirrors bench.py (same warmups, same noop sink, same
 local[$SPARK_GRAFT_CPUS] master, same $SPARK_GRAFT_SF_DIR data) but
@@ -101,6 +105,57 @@ def task_overhead(passes: int) -> dict:
     return out
 
 
+KB_BUILD_SIZES = (120, 20_000)
+
+
+def kb_build(passes: int) -> dict:
+    """Median wall ms over ``passes`` (after 2 warm-ups) of the driver
+    KB builder, ``linking.build_kb_broadcasts``, on datagen KBs of
+    KB_BUILD_SIZES entities written to parquet. The warm-ups fill the
+    driver's word-vector memo, so the passes time the collects, the
+    gazetteer dict, the centroid loop, the canonical map and the
+    broadcasts, as a repeated build in one driver pays them."""
+    import shutil
+    import tempfile
+
+    from grisp_spark.kg import datagen, linking
+    from grisp_spark.session import get_spark
+
+    spark = get_spark(
+        "bench_extra", cores=CPUS,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    out = {}
+    tmp = tempfile.mkdtemp(prefix="kb_build_")
+    try:
+        for n in KB_BUILD_SIZES:
+            kb = {}
+            for name, pdf in datagen.generate_kb(seed=7, n_entities=n).items():
+                path = os.path.join(tmp, f"{name}_{n}.parquet")
+                pdf.to_parquet(path, index=False)
+                kb[name] = spark.read.parquet(path)
+            for _ in range(2):
+                linking.build_kb_broadcasts(spark, kb)
+            secs = []
+            s0 = _steal()
+            for _ in range(passes):
+                t0 = time.perf_counter()
+                linking.build_kb_broadcasts(spark, kb)
+                secs.append(time.perf_counter() - t0)
+            s1 = _steal()
+            secs.sort()
+            out[f"kb_build_{n}_ms"] = round(1000 * secs[len(secs) // 2], 1)
+            out[f"kb_build_{n}_steal_cpu_s"] = (
+                round((s1 - s0) / 100.0, 1)
+                if s0 is not None and s1 is not None
+                else None
+            )
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    out.update(passes=passes, warmups=2, cores=CPUS)
+    return out
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", default=None)
@@ -108,10 +163,14 @@ def main() -> None:
     ap.add_argument("--plans", default=None, metavar="DIR")
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--task-overhead", action="store_true")
+    ap.add_argument("--kb-build", action="store_true")
     args = ap.parse_args()
 
     if args.task_overhead:
         print(json.dumps(task_overhead(max(args.passes, 5))), flush=True)
+        return
+    if args.kb_build:
+        print(json.dumps(kb_build(max(args.passes, 5))), flush=True)
         return
 
     import __spark_entry__ as entry_mod

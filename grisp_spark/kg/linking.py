@@ -11,12 +11,15 @@ partitions, exactly like the reference's "LMDB to avoid distributed
 data" design (/root/reference/README.md:9) but with Spark broadcast
 instead of local LMDB files.
 
-This module holds the one Python linking core (_pick_batch, every
-score mode) and the one turn-window triple emitter
-(emit_window_triples). The broadcast, fused, shuffle
-(kg/linking_shuffle.py) and streaming (streaming/stateful.py) kernels
-all score through the former; the fused and streaming kernels emit
-through the latter. Only the oracle keeps its own copy of both.
+Every linking path takes one route from the KB tables to the picked
+spans, and this module holds each step once: the KB builder
+(build_kb_broadcasts), the greedy detection loop (_detect_all over
+spec.detect_mentions_pruned), the linking core (_pick_batch, every
+score mode) and the turn-window emitter (emit_window_triples). The
+broadcast, fused, shuffle (kg/linking_shuffle.py, over a batch-local
+gazetteer slice) and streaming (streaming/stateful.py) kernels all
+detect and score through them; linking_shuffle.adaptive_linker is the
+one broadcast-vs-shuffle decision. Only the oracle keeps its own copy.
 
 Scale notes (100 TB): the broadcast gazetteer is the working-set
 bound (reference sizes: ~64M labels, LabelCache.java:46). A python
@@ -74,8 +77,9 @@ def load_word_vectors(spark: SparkSession, vectors: DataFrame):
     vector} — the file-backed replacement for the md5 pseudo-vectors,
     matching the reference's quantized word2vec consumption shape
     (Word2VecCompress.java:45-96). Pass the result as ``wvec_bc`` to
-    build_broadcasts / link_mentions / link_and_extract; words missing
-    from the table are OOV and skipped in context scoring."""
+    build_kb_broadcasts / link_mentions / link_and_extract /
+    linking_shuffle.adaptive_linker; words missing from the table are
+    OOV and skipped in context scoring."""
     pdf = vectors.toPandas()
     wv = {
         r.word: np.asarray(list(r.vec), dtype=np.float32)
@@ -85,10 +89,10 @@ def load_word_vectors(spark: SparkSession, vectors: DataFrame):
 
 
 def _collect_gazetteer(kb: dict[str, DataFrame]) -> dict:
-    """label_stats → {surface: ordered senses}. The ONE gazetteer
-    build shared by build_broadcasts and build_kb_broadcasts (the two
-    previously duplicated it verbatim — fork risk on the shared
-    semantics)."""
+    """label_stats → {surface: ordered senses}: the gazetteer half of
+    build_kb_broadcasts, the one KB builder. Surfaces of
+    MAX_LABEL_CHARS or more are dropped here, as LabelCache.java:122
+    drops them on load."""
     stats = (
         kb["label_stats"]
         .filter(F.length("label") < spec.MAX_LABEL_CHARS)
@@ -105,7 +109,7 @@ def _collect_gazetteer(kb: dict[str, DataFrame]) -> dict:
 
 def _evecs_from_ents(ents: pd.DataFrame, wvec_bc=None) -> dict:
     """(entity_id, context_vocab) pandas frame → {id: centroid vector}
-    — shared by both broadcast builders. The pseudo-embedding goes
+    for build_kb_broadcasts. The pseudo-embedding goes
     through the kernels' word-vector memo, so repeated KB builds in
     one driver reuse it."""
     vec_fn = (
@@ -117,39 +121,16 @@ def _evecs_from_ents(ents: pd.DataFrame, wvec_bc=None) -> dict:
     }
 
 
-def build_broadcasts(spark: SparkSession, kb: dict[str, DataFrame], wvec_bc=None):
-    """Collect the (small) KB side to the driver and broadcast it —
-    the Spark analogue of the reference driver building LMDB caches
-    between jobs (DumpExtractor.java:253-273,302-344). At real scale
-    label_stats is itself a pipeline output (stats.py) and this stays
-    a broadcast as long as it fits (AQE would pick broadcast for the
-    equivalent join anyway); beyond that, flip to a shuffle join on
-    surface."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    # two independent driver jobs, overlapped (guide §2.6)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        gaz_f = pool.submit(_collect_gazetteer, kb)
-        ents_f = pool.submit(
-            kb["entities"].select("entity_id", "context_vocab").toPandas
-        )
-        gaz, ents = gaz_f.result(), ents_f.result()
-    evecs = _evecs_from_ents(ents, wvec_bc)
-    sc = spark.sparkContext
-    return sc.broadcast(gaz), sc.broadcast(evecs)
-
-
 def build_kb_broadcasts(spark: SparkSession, kb: dict[str, DataFrame], wvec_bc=None):
-    """(gaz_bc, evec_bc, canon_bc) from ONE collection per KB table:
-    entities ride to the driver once — (entity_id, context_vocab,
-    redirect_to) — feeding both the vector build and a driver-side
-    min-id union-find for the canonical map (the driver twin of
-    canonicalize.canonical_map's connected components). Two driver
-    jobs instead of the 5-6 that build_broadcasts plus a collected
-    canonicalize.canonical_map cost (each toPandas/count is a full
-    job; the reference's DumpExtractor.java:253-344 likewise builds
-    all its LMDB caches in one pass). Broadcast-regime only, like its
-    callers — beyond BROADCAST_LABEL_LIMIT use the shuffle path."""
+    """The one KB builder: (gaz_bc, evec_bc, canon_bc) from ONE
+    collection per KB table — the reference driver likewise builds all
+    its LMDB caches in one pass (DumpExtractor.java:253-344). Entities
+    ride to the driver once — (entity_id, context_vocab, redirect_to)
+    — feeding both the vector build and a driver-side min-id
+    union-find for the canonical map (the driver twin of
+    canonicalize.canonical_map). Callers without a use for it ignore
+    ``canon_bc``. Broadcast regime only: past BROADCAST_LABEL_LIMIT,
+    linking_shuffle.adaptive_linker never calls it."""
     from concurrent.futures import ThreadPoolExecutor
 
     from grisp_spark.kg import canonicalize
@@ -184,6 +165,10 @@ def build_kb_broadcasts(spark: SparkSession, kb: dict[str, DataFrame], wvec_bc=N
     canon = canonicalize.union_find_mapping(ents["entity_id"], redirect_pairs)
     sc = spark.sparkContext
     return sc.broadcast(gaz), sc.broadcast(evecs), sc.broadcast(canon)
+
+
+# the name the traced benchmark run still patches; same builder
+build_broadcasts = build_kb_broadcasts
 
 
 # Executor-local packed entity-vector matrix, keyed by the evec
@@ -524,6 +509,22 @@ def linked_frame(picked_by_row, pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(out)
 
 
+def _conv_layout(conv: DataFrame, n_partitions: int | None) -> DataFrame:
+    """The layout both broadcast kernels run on: only the columns the
+    kernel reads (guide §4 — mapInPandas is opaque to Catalyst's
+    pruning, so without the select unused columns like ts cross the
+    Arrow boundary on every row), repartitioned by conv_id and sorted
+    by (conv_id, turn_idx) inside each partition. The session is read
+    only when ``n_partitions`` is not given, so a stand-in frame that
+    implements just these calls can be laid out too."""
+    n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
+    return conv.select(
+        "conv_id", "turn_idx", "role", "tool", "text"
+    ).repartition(n_partitions, "conv_id").sortWithinPartitions(
+        "conv_id", "turn_idx"
+    )
+
+
 def link_mentions(
     conv: DataFrame,
     gaz_bc,
@@ -538,8 +539,6 @@ def link_mentions(
     north-rule layout: each conversation contiguous and ordered inside
     a partition, mirroring grisp's one-page-per-map-call atomicity,
     LabelSensesStep.java:199-311)."""
-    n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
-
     # driver-side stable broadcast ids, captured into the closure
     cache_key = gaz_bc._jbroadcast.id()
     evec_key = evec_bc._jbroadcast.id()
@@ -556,15 +555,7 @@ def link_mentions(
             )
             yield linked_frame(picked_by_row, pdf)
 
-    # guide §4: ship ONLY the columns the kernel reads (mapInPandas is
-    # opaque to Catalyst's pruning — without the select, unused input
-    # columns like ts cross the Arrow boundary on every row)
-    laid_out = conv.select(
-        "conv_id", "turn_idx", "role", "tool", "text"
-    ).repartition(n_partitions, "conv_id").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
-    return laid_out.mapInPandas(run, schema=LINKED_SCHEMA)
+    return _conv_layout(conv, n_partitions).mapInPandas(run, schema=LINKED_SCHEMA)
 
 
 TRIPLES_SCHEMA = "conv_id string, turn_idx int, subj long, pred string, obj string"
@@ -661,8 +652,6 @@ def link_and_extract(
     triples.extract_triples); tests assert all three agree with the
     reference oracle. ``canon_bc`` broadcasts {entity_id:
     canonical_id} (build_kb_broadcasts)."""
-    n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
-
     # driver-side stable broadcast ids, captured into the closure
     cache_key = gaz_bc._jbroadcast.id()
     evec_key = evec_bc._jbroadcast.id()
@@ -686,47 +675,5 @@ def link_and_extract(
             )
             yield out
 
-    # guide §4: only the kernel's input columns cross the Arrow
-    # boundary (ts in particular never did anything but serialize)
-    laid_out = conv.select(
-        "conv_id", "turn_idx", "role", "tool", "text"
-    ).repartition(n_partitions, "conv_id").sortWithinPartitions(
-        "conv_id", "turn_idx"
-    )
-    return laid_out.mapInPandas(run, schema=TRIPLES_SCHEMA)
+    return _conv_layout(conv, n_partitions).mapInPandas(run, schema=TRIPLES_SCHEMA)
 
-
-def detect_only(conv: DataFrame, gaz_bc, n_partitions: int | None = None) -> DataFrame:
-    """Detection without linking (text-occurrence side, A3 analogue) —
-    used by the stats stage and unit tests."""
-    n_partitions = n_partitions or conv.sparkSession.sparkContext.defaultParallelism
-
-    # driver-side stable broadcast id, captured into the closure
-    cache_key = gaz_bc._jbroadcast.id()
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz = gaz_bc.value
-        idx = _first_token_index(gaz, cache_key)
-        for pdf in batches:
-            rows = {"conv_id": [], "turn_idx": [], "begin": [], "end": [], "surface": []}
-            conv_ids = pdf["conv_id"].tolist()
-            turn_idxs = pdf["turn_idx"].tolist()
-            tokens_by_row = [spec.tokenize(t or "") for t in pdf["text"].tolist()]
-            found_by_row = _detect_all(
-                tokens_by_row, gaz, idx, _intern_tokens(tokens_by_row)
-            )
-            for i, found in enumerate(found_by_row):
-                for begin, end, surface in found:
-                    rows["conv_id"].append(conv_ids[i])
-                    rows["turn_idx"].append(turn_idxs[i])
-                    rows["begin"].append(begin)
-                    rows["end"].append(end)
-                    rows["surface"].append(surface)
-            yield pd.DataFrame(rows)
-
-    laid_out = conv.select("conv_id", "turn_idx", "text").repartition(
-        n_partitions, "conv_id"
-    ).sortWithinPartitions("conv_id", "turn_idx")
-    return laid_out.mapInPandas(
-        run, schema="conv_id string, turn_idx int, begin int, end int, surface string"
-    )

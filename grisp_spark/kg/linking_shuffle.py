@@ -16,13 +16,14 @@ linked-mention rows with the KB kept DISTRIBUTED end to end:
 3. expand candidate ngrams JVM-side (``transform``/``slice``) and
    equi-join them against the per-label sense table (sort-merge at
    scale — uniform string keys, AQE handles residual skew);
-4. re-group matched spans per turn and resolve the greedy
-   longest-match-first non-overlap rule in one Arrow kernel, which
-   hands the picked spans, a batch-local {surface: senses} slice and
-   an entity-vector pack of the batch's candidates to
-   ``linking._pick_batch`` — the same batch scorer the broadcast path
-   runs, so parity is structural, not re-implemented, and the
-   per-turn scoring cost is the broadcast regime's.
+4. re-group matched spans per turn; one Arrow kernel turns the
+   batch's spans into a {surface: senses} slice (plus an
+   entity-vector pack) and runs the broadcast path's own detection
+   (``linking._detect_all``) and scorer (``linking._pick_batch``)
+   over it. The slice holds every gazetteer n-gram occurring in the
+   batch (the JVM already dropped F6 apostrophe skips and over-long
+   surfaces), so each probe of the greedy scan answers as the full
+   gazetteer would: parity is structural, not re-implemented.
 
 Entity context vectors are computed distributed too (mapInPandas over
 the entities table) and ride the sense table as float32 arrays, so no
@@ -49,8 +50,8 @@ from grisp_spark.kg import linking, spec
 from grisp_spark.kg.linking import LINKED_SCHEMA
 
 # above this many labels the broadcast dict stops being the right
-# plan (~1-2 GB of python dict); link_mentions_adaptive flips to the
-# shuffle path
+# plan (~1-2 GB of python dict); adaptive_linker flips to the shuffle
+# path
 BROADCAST_LABEL_LIMIT = 5_000_000
 
 
@@ -75,8 +76,9 @@ def first_token_index_table(labels: DataFrame) -> DataFrame:
 
 def entity_vectors_table(entities: DataFrame, wvec_bc=None) -> DataFrame:
     """(entity_id, vec float32[]) computed DISTRIBUTED — the same
-    spec.centroid(context_vocab) the driver-side build_broadcasts
-    runs, as a mapInPandas over the entities table."""
+    spec.centroid(context_vocab) the driver-side
+    linking.build_kb_broadcasts runs, as a mapInPandas over the
+    entities table."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
@@ -236,65 +238,55 @@ def link_mentions_shuffle(
             tokens_by_row = [list(t) for t in pdf["tokens"].tolist()]
             # batch-local KB slice: the senses (and entity vectors) of
             # every surface that matched in this batch — exactly the
-            # entries of the broadcast gazetteer the spans touch
+            # entries of the broadcast gazetteer the scan can probe
             gaz: dict[str, list] = {}
             evecs: dict[int, np.ndarray] = {}
-            found_by_row = []
-            for tokens, spans in zip(tokens_by_row, pdf["spans"].tolist()):
-                by_begin: dict[int, dict] = {}
+            for spans in pdf["spans"].tolist():
                 for sp in spans:
-                    cur = by_begin.get(sp["begin"])
-                    if cur is None or sp["end"] > cur["end"]:
-                        by_begin[sp["begin"]] = sp
-                # greedy longest-match-first, left to right — the same
-                # region rule as spec.detect_mentions (Util.java:39-76)
-                found = []
-                i, n = 0, len(tokens)
-                while i < n:
-                    sp = by_begin.get(i)
-                    if sp is None:
-                        i += 1
-                        continue
                     surface = sp["surface"]
-                    if surface not in gaz:
-                        gaz[surface] = [
-                            (int(s["entity_id"]), int(s["link_occ"]), int(s["link_doc"]))
-                            for s in sp["senses"]
-                        ]
-                        if score_mode != "prior":
-                            for s in sp["senses"]:
-                                evecs[int(s["entity_id"])] = np.asarray(
-                                    s["vec"], dtype=np.float32
-                                )
-                    found.append((i, sp["end"], surface))
-                    i = sp["end"]
-                found_by_row.append(found)
+                    if surface in gaz:
+                        continue
+                    gaz[surface] = [
+                        (int(s["entity_id"]), int(s["link_occ"]), int(s["link_doc"]))
+                        for s in sp["senses"]
+                    ]
+                    if score_mode != "prior":
+                        for s in sp["senses"]:
+                            evecs[int(s["entity_id"])] = np.asarray(
+                                s["vec"], dtype=np.float32
+                            )
+            interned = linking._intern_tokens(tokens_by_row)
+            found_by_row = linking._detect_all(
+                tokens_by_row, gaz, spec.build_first_token_index(gaz), interned
+            )
             picked_by_row = linking._pick_batch(
                 tokens_by_row, found_by_row, gaz, evecs,
-                linking._build_evec_pack(evecs), score_mode, vec_fn,
+                linking._build_evec_pack(evecs), score_mode, vec_fn, interned,
             )
             yield linking.linked_frame(picked_by_row, pdf)
 
     return turn_frame.mapInPandas(run, schema=LINKED_SCHEMA)
 
 
-def link_mentions_adaptive(
-    conv: DataFrame,
+def adaptive_linker(
     kb: dict[str, DataFrame],
     n_partitions: int | None = None,
     score_mode: str = "centroid",
     wvec_bc=None,
     broadcast_label_limit: int = BROADCAST_LABEL_LIMIT,
-) -> DataFrame:
-    """Pick the plan by gazetteer size: broadcast dict (map-side, one
-    layout shuffle — linking.link_mentions) while the label table fits
-    executor memory, shuffle joins beyond — closing the documented
-    caveat at LabelCache.java:46 scale."""
-    n_labels = kb["label_stats"].count()
-    if n_labels <= broadcast_label_limit:
-        spark = conv.sparkSession
-        gaz_bc, evec_bc = linking.build_broadcasts(spark, kb, wvec_bc)
-        return linking.link_mentions(
-            conv, gaz_bc, evec_bc, n_partitions, score_mode, wvec_bc
+):
+    """The one broadcast-vs-shuffle plan decision, made once per KB;
+    returns ``conv → linked mentions``. Up to ``broadcast_label_limit``
+    labels the KB is broadcast once and every call links map-side
+    (linking.link_mentions); beyond, nothing is collected and every
+    call takes the shuffle-join plan (LabelCache.java:46 scale)."""
+    if kb["label_stats"].count() > broadcast_label_limit:
+        return lambda conv: link_mentions_shuffle(
+            conv, kb, n_partitions, score_mode, wvec_bc
         )
-    return link_mentions_shuffle(conv, kb, n_partitions, score_mode, wvec_bc)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(
+        kb["label_stats"].sparkSession, kb, wvec_bc
+    )
+    return lambda conv: linking.link_mentions(
+        conv, gaz_bc, evec_bc, n_partitions, score_mode, wvec_bc
+    )

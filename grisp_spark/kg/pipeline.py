@@ -157,31 +157,22 @@ class KGPipeline:
             conv = self.conversations().withColumn(
                 "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets))
             )
-            kb = self.kb()
-            # adaptive plan choice, decided ONCE for the whole stage
-            # (mirrors linking_shuffle.link_mentions_adaptive — the
-            # 64M-label regime of util/LabelCache.java:46): while the
-            # gazetteer fits executor memory, collect it to a broadcast
-            # dict and link map-side; past the limit, never collect —
-            # every bucket goes through the distributed shuffle-join
-            # plan instead. Parity across regimes is pinned by
+            # the plan (broadcast dict while the gazetteer fits
+            # executor memory, shuffle joins in the 64M-label regime of
+            # util/LabelCache.java:46) is decided ONCE for the whole
+            # stage by linking_shuffle.adaptive_linker, and the KB is
+            # broadcast at most once; every bucket reuses the returned
+            # linker. Parity across regimes is pinned by
             # tests/test_kg_pipeline.py::test_pipeline_shuffle_regime.
-            use_broadcast = kb["label_stats"].count() <= self.broadcast_label_limit
-            if use_broadcast:
-                gaz_bc, evec_bc = linking.build_broadcasts(self.spark, kb)
+            link = linking_shuffle.adaptive_linker(
+                self.kb(), self.n_partitions,
+                broadcast_label_limit=self.broadcast_label_limit,
+            )
             for b in todo:
                 t0 = time.monotonic()
                 part = conv.filter(F.col("bucket") == b).drop("bucket")
                 rows_in = part.count()
-                if use_broadcast:
-                    linked_b = linking.link_mentions(
-                        part, gaz_bc, evec_bc, self.n_partitions
-                    )
-                else:
-                    linked_b = linking_shuffle.link_mentions_shuffle(
-                        part, kb, self.n_partitions
-                    )
-                linked_b = linked_b.withColumn("bucket", F.lit(b))
+                linked_b = link(part).withColumn("bucket", F.lit(b))
                 # dynamic partition overwrite: replaces ONLY bucket=b,
                 # so a bucket that crashed mid-write (files on disk,
                 # no lineage record) is cleanly rewritten on resume

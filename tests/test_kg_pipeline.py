@@ -63,8 +63,15 @@ def test_mention_parity(spark, dataset, oracle_result):
         for n in ("entities", "aliases", "label_stats")
     }
     conv = spark.read.parquet(os.path.join(dataset, "conversations.parquet"))
-    gaz_bc, _ = linking.build_broadcasts(spark, kb_df)
-    got = linking.detect_only(conv, gaz_bc, 8).toPandas()
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb_df)
+    # every detected span is linked (each gazetteer surface has at
+    # least one sense), so linked rows projected onto the span columns
+    # are the detected mention set
+    got = (
+        linking.link_mentions(conv, gaz_bc, evec_bc, 8)
+        .select("conv_id", "turn_idx", "begin", "end", "surface")
+        .toPandas()
+    )
     got_set = {
         (r.conv_id, int(r.turn_idx), int(r.begin), int(r.end), r.surface)
         for r in got.itertuples(index=False)
@@ -346,7 +353,7 @@ def test_resume_identity(spark, dataset, pipeline_result):
 
     conv_b = conv.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(4)))
     kb = pipe.kb()
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb)
     for b in (0, 1):
         part = conv_b.filter(F.col("bucket") == b).drop("bucket")
         linked_b = linking.link_mentions(part, gaz_bc, evec_bc, 8).withColumn(
@@ -417,7 +424,7 @@ def test_resume_after_midwrite_crash(spark, dataset, pipeline_result):
         "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(4))
     )
     kb = pipe.kb()
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb)
     # bucket 0: written fully but NO lineage record (simulated crash)
     part = conv_b.filter(F.col("bucket") == 0).drop("bucket")
     linked_0 = linking.link_mentions(part, gaz_bc, evec_bc, 8).withColumn(

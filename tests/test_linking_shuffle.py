@@ -34,7 +34,7 @@ def _rows(df):
 @pytest.mark.parametrize("score_mode", ["centroid", "prior", "lr"])
 def test_shuffle_matches_broadcast(spark, corpus, score_mode):
     conv, kb = corpus
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb)
     broadcast_rows = _rows(
         linking.link_mentions(conv, gaz_bc, evec_bc, 8, score_mode)
     )
@@ -47,12 +47,12 @@ def test_shuffle_matches_broadcast(spark, corpus, score_mode):
 
 def test_adaptive_picks_shuffle_above_threshold(spark, corpus):
     conv, kb = corpus
-    small = linking_shuffle.link_mentions_adaptive(
-        conv, kb, 8, "prior", broadcast_label_limit=10**9
-    )
-    big = linking_shuffle.link_mentions_adaptive(
-        conv, kb, 8, "prior", broadcast_label_limit=0
-    )
+    small = linking_shuffle.adaptive_linker(
+        kb, 8, "prior", broadcast_label_limit=10**9
+    )(conv)
+    big = linking_shuffle.adaptive_linker(
+        kb, 8, "prior", broadcast_label_limit=0
+    )(conv)
     assert _rows(small) == _rows(big)
 
 
@@ -66,18 +66,23 @@ def _canonical_dict(entities):
 
 
 def test_fused_builder_matches_separate(spark, corpus):
-    """build_kb_broadcasts (one entities collection + driver-side
-    union-find) must produce the same gazetteer and vectors as
-    build_broadcasts, and the same canonical map as the distributed
-    canonicalize.canonical_map — including over the datagen corpus's
-    2-3-hop redirect chains."""
+    """build_kb_broadcasts, the one KB builder (one entities collection
+    + driver-side union-find), must equal the independent references:
+    the oracle's gazetteer, the oracle's entity vectors byte for byte,
+    and both the distributed canonicalize.canonical_map and the
+    oracle's union-find canonical map — including over the datagen
+    corpus's 2-3-hop redirect chains."""
+    from grisp_spark.kg import oracle
+
     conv, kb = corpus
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
     g2, e2, c2 = linking.build_kb_broadcasts(spark, kb)
-    assert g2.value == gaz_bc.value
-    assert set(e2.value) == set(evec_bc.value)
-    assert all((e2.value[k] == evec_bc.value[k]).all() for k in e2.value)
+    kb_pdf = {n: df.toPandas() for n, df in kb.items()}
+    assert g2.value == oracle.build_gazetteer(kb_pdf)
+    ref_vecs = oracle.entity_vectors(kb_pdf)
+    assert set(e2.value) == set(ref_vecs)
+    assert all(e2.value[k].tobytes() == ref_vecs[k].tobytes() for k in ref_vecs)
     assert c2.value == _canonical_dict(kb["entities"])
+    assert c2.value == oracle.canonical_map(kb_pdf)
     assert any(k != v for k, v in c2.value.items()), (
         "corpus must exercise non-identity canonicalization"
     )
@@ -99,13 +104,13 @@ def test_adaptive_flip_actually_routes(spark, corpus, monkeypatch):
         linking_shuffle, "link_mentions_shuffle",
         lambda *a, **k: calls.append("shuffle") or orig_sh(*a, **k),
     )
-    below = linking_shuffle.link_mentions_adaptive(
-        conv, kb, 8, "centroid", broadcast_label_limit=10**9
-    )
+    below = linking_shuffle.adaptive_linker(
+        kb, 8, "centroid", broadcast_label_limit=10**9
+    )(conv)
     assert calls == ["broadcast"]
-    above = linking_shuffle.link_mentions_adaptive(
-        conv, kb, 8, "centroid", broadcast_label_limit=0
-    )
+    above = linking_shuffle.adaptive_linker(
+        kb, 8, "centroid", broadcast_label_limit=0
+    )(conv)
     assert calls == ["broadcast", "shuffle"]
     assert _rows(below) == _rows(above)
 
@@ -122,7 +127,7 @@ def test_dangling_entity_parity(spark, corpus, score_mode):
     # from `entities` guarantees dangling senses that actually match
     ents = kb["entities"].filter("entity_id != 0")
     dirty = {**kb, "entities": ents}
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, dirty)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, dirty)
     broadcast_rows = _rows(
         linking.link_mentions(conv, gaz_bc, evec_bc, 8, score_mode)
     )
@@ -191,9 +196,9 @@ def test_adaptive_flip_triples_parity(spark, corpus):
     canon = canonicalize.canonical_map(kb["entities"])
 
     def triples(limit):
-        linked = linking_shuffle.link_mentions_adaptive(
-            conv, kb, 8, "centroid", broadcast_label_limit=limit
-        )
+        linked = linking_shuffle.adaptive_linker(
+            kb, 8, "centroid", broadcast_label_limit=limit
+        )(conv)
         return sorted(
             tuple(r)
             for r in extract_triples(canonicalize.rewrite_linked(linked, canon))
@@ -264,7 +269,7 @@ def test_centroid_chunking_invariance(spark, corpus, monkeypatch):
     spec.seq_segment_sums' fold is segment-local. Force pathologically
     tiny chunks and require row identity with the default."""
     conv, kb = corpus
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb)
     baseline = _rows(linking.link_mentions(conv, gaz_bc, evec_bc, 8, "centroid"))
     monkeypatch.setattr(linking, "MAX_CTX_ROWS_PER_CHUNK", 7)
     tiny = _rows(linking.link_mentions(conv, gaz_bc, evec_bc, 8, "centroid"))
@@ -309,7 +314,7 @@ def test_linking_partition_count_invariance(spark, corpus):
     driver-red). Per-mention math is partition-independent by design
     — pin it across a 6x partitioning spread."""
     conv, kb = corpus
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb)
     a = _rows(linking.link_mentions(conv, gaz_bc, evec_bc, 3, "centroid"))
     b = _rows(linking.link_mentions(conv, gaz_bc, evec_bc, 18, "centroid"))
     assert a, "invariance test needs non-empty output"

@@ -57,7 +57,7 @@ def test_linking_stage_single_shuffle(spark):
         n: spark.read.parquet(f"/root/repo/.data/plan_probe/{n}.parquet")
         for n in ("entities", "aliases", "label_stats")
     }
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb)
     linked = linking.link_mentions(conv, gaz_bc, evec_bc, 8)
     plan = _plan(linked)
     assert plan.count("Exchange") == 1, plan

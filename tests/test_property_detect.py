@@ -122,3 +122,49 @@ def test_detect_pruned_matches_detect(tc):
     assert linking._detect_all(rows, gaz, idx, interned) == [
         spec.detect_mentions(r, gaz, idx) for r in rows
     ]
+
+
+def jvm_slice(rows, gazetteer):
+    """The batch-local gazetteer slice the shuffle path's JVM join
+    builds (linking_shuffle._candidate_spans ⋈ the sense table): every
+    gazetteer n-gram of ≤ MAX_LABEL_TOKENS tokens that occurs in the
+    batch, is under MAX_LABEL_CHARS and is not an F6 apostrophe skip."""
+    out = {}
+    for tokens in rows:
+        n = len(tokens)
+        for i in range(n):
+            for ln in range(1, min(spec.MAX_LABEL_TOKENS, n - i) + 1):
+                surf = spec.ngram_key(" ".join(tokens[i : i + ln]))
+                apos_skip = (
+                    ln == 1
+                    and len(tokens[i]) == 1
+                    and i > 0
+                    and tokens[i - 1].endswith("'")
+                )
+                if (
+                    surf in gazetteer
+                    and len(surf) < spec.MAX_LABEL_CHARS
+                    and not apos_skip
+                ):
+                    out[surf] = gazetteer[surf]
+    return out
+
+
+@settings(max_examples=60, deadline=None)
+@given(case())
+def test_detect_over_batch_slice_matches_full_gazetteer(tc):
+    """The shuffle kernel detects against the batch slice instead of
+    the full gazetteer: every membership probe of the greedy scan must
+    answer the same, so the spans are identical — per row, and through
+    the batch wrapper with the slice's own first-token index, where a
+    surface one row contributes can be probed in another."""
+    tokens, gaz = tc
+    rows = [tokens, tokens[: len(tokens) // 2], tokens[len(tokens) // 3 :]]
+    sl = jvm_slice(rows, gaz)
+    assert spec.detect_mentions(tokens, sl) == spec.detect_mentions(tokens, gaz)
+    from grisp_spark.kg import linking
+
+    interned = linking._intern_tokens(rows)
+    assert linking._detect_all(
+        rows, sl, spec.build_first_token_index(sl), interned
+    ) == [spec.detect_mentions(r, gaz) for r in rows]

@@ -22,7 +22,7 @@ def test_stream_matches_batch(spark):
         n: spark.read.parquet(os.path.join(DATA, "kb", f"{n}.parquet"))
         for n in ("entities", "aliases", "label_stats")
     }
-    gaz_bc, evec_bc = linking.build_broadcasts(spark, kb)
+    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb)
 
     out_dir = os.path.join(DATA, "linked_stream")
     q = ingest.stream_linked_mentions(spark, in_dir, out_dir, gaz_bc, evec_bc)
