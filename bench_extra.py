@@ -12,8 +12,9 @@ Modes:
                                          # JVM-only vs Python stage
   python bench_extra.py --kb-build       # driver KB build (collect,
                                          # gazetteer, vectors, canon,
-                                         # broadcast) at 120 and 20k
-                                         # datagen entities
+                                         # broadcast) and its entity-
+                                         # vector step alone, at 120
+                                         # and 20k datagen entities
 
 Protocol mirrors bench.py (same warmups, same noop sink, same
 local[$SPARK_GRAFT_CPUS] master, same $SPARK_GRAFT_SF_DIR data) but
@@ -113,8 +114,11 @@ def kb_build(passes: int) -> dict:
     KB builder, ``linking.build_kb_broadcasts``, on datagen KBs of
     KB_BUILD_SIZES entities written to parquet. The warm-ups fill the
     driver's word-vector memo, so the passes time the collects, the
-    gazetteer dict, the centroid loop, the canonical map and the
-    broadcasts, as a repeated build in one driver pays them."""
+    gazetteer dict, the entity vectors, the canonical map and the
+    broadcasts, as a repeated build in one driver pays them.
+    ``kb_build_<n>_vectors_ms`` times the builder's entity-vector step
+    alone ({entity_id: vector} from the collected entities, warm
+    memo)."""
     import shutil
     import tempfile
 
@@ -136,6 +140,19 @@ def kb_build(passes: int) -> dict:
                 kb[name] = spark.read.parquet(path)
             for _ in range(2):
                 linking.build_kb_broadcasts(spark, kb)
+            ents = kb["entities"].select("entity_id", "context_vocab").toPandas()
+            secs = []
+            for _ in range(passes):
+                t0 = time.perf_counter()
+                dict(zip(
+                    ents["entity_id"].tolist(),
+                    linking.entity_vectors(
+                        ents["context_vocab"], linking._cached_word_vec
+                    ),
+                ))
+                secs.append(time.perf_counter() - t0)
+            secs.sort()
+            out[f"kb_build_{n}_vectors_ms"] = round(1000 * secs[len(secs) // 2], 1)
             secs = []
             s0 = _steal()
             for _ in range(passes):

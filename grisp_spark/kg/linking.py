@@ -15,11 +15,13 @@ Every linking path takes one route from the KB tables to the picked
 spans, and this module holds each step once: the KB builder
 (build_kb_broadcasts), the greedy detection loop (_detect_all over
 spec.detect_mentions_pruned), the linking core (_pick_batch, every
-score mode) and the turn-window emitter (emit_window_triples). The
-broadcast, fused, shuffle (kg/linking_shuffle.py, over a batch-local
-gazetteer slice) and streaming (streaming/stateful.py) kernels all
-detect and score through them; linking_shuffle.adaptive_linker is the
-one broadcast-vs-shuffle decision. Only the oracle keeps its own copy.
+score mode), the entity vectors (entity_vectors) and the turn-window
+emitter (emit_window_triples). The broadcast, fused, shuffle
+(kg/linking_shuffle.py, over a batch-local gazetteer slice) and
+streaming (streaming/stateful.py) kernels detect and score through
+them; the fused, staged (kg/triples.py) and streaming paths emit
+through the one emitter; linking_shuffle.adaptive_linker is the one
+broadcast-vs-shuffle decision. Only the oracle keeps its own copy.
 
 Scale notes (100 TB): the broadcast gazetteer is the working-set
 bound (reference sizes: ~64M labels, LabelCache.java:46). A python
@@ -107,18 +109,21 @@ def _collect_gazetteer(kb: dict[str, DataFrame]) -> dict:
     return {k: spec.order_senses(v) for k, v in gaz.items()}
 
 
-def _evecs_from_ents(ents: pd.DataFrame, wvec_bc=None) -> dict:
-    """(entity_id, context_vocab) pandas frame → {id: centroid vector}
-    for build_kb_broadcasts. The pseudo-embedding goes
-    through the kernels' word-vector memo, so repeated KB builds in
-    one driver reuse it."""
-    vec_fn = (
-        spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else _cached_word_vec
-    )
-    return {
-        int(r.entity_id): spec.centroid(list(r.context_vocab), vec_fn)
-        for r in ents.itertuples(index=False)
-    }
+def entity_vectors(vocab_lists, vec_fn) -> np.ndarray:
+    """Context vocabularies → (n, EMBED_DIM) float32 entity vectors,
+    row i bit-identical to spec.centroid(vocab_lists[i], vec_fn): one
+    interning, one vec_fn call per distinct word, batched folds. The
+    driver KB builder and linking_shuffle.entity_vectors_table share it."""
+    codes, uniques, offsets = _intern_tokens(vocab_lists)
+    umap, M = _word_matrix(uniques, range(len(uniques)), vec_fn)
+    idx = umap[codes]
+    valid = idx >= 0
+    # vocabulary i's in-vocabulary words are rows vstarts[i]:vstarts[i+1]
+    vstarts = np.concatenate(([0], np.cumsum(valid, dtype=np.int64)))[offsets]
+    out = np.empty((len(offsets) - 1, spec.EMBED_DIM), dtype=np.float32)
+    for start, end, cents in _segment_centroids(M, idx[valid], vstarts):
+        out[start:end] = cents
+    return out
 
 
 def build_kb_broadcasts(spark: SparkSession, kb: dict[str, DataFrame], wvec_bc=None):
@@ -156,7 +161,13 @@ def build_kb_broadcasts(spark: SparkSession, kb: dict[str, DataFrame], wvec_bc=N
         gaz_f = pool.submit(_collect_gazetteer, kb)
         ents_f = pool.submit(_ents_pdf)
         gaz, ents = gaz_f.result(), ents_f.result()
-    evecs = _evecs_from_ents(ents, wvec_bc)
+    # the kernels' word-vector memo: repeated builds in one driver reuse it
+    vec_fn = (
+        spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else _cached_word_vec
+    )
+    evecs = dict(
+        zip(ents["entity_id"].tolist(), entity_vectors(ents["context_vocab"], vec_fn))
+    )
     redirect_pairs = [
         (int(e), int(t))
         for e, t in zip(ents["entity_id"], ents["redirect_to"])
@@ -202,6 +213,47 @@ def _evec_pack(evecs: dict, cache_key: int):
 # COPIED by np.stack (the per-word arrays themselves are cache refs),
 # so cap the copy at ~2M 32-dim rows (~512 MB stacked directly as f64)
 MAX_CTX_ROWS_PER_CHUNK = 2_000_000
+
+
+def _word_matrix(uniques, used, vf):
+    """Vectors of the interned words ``uniques[used]``: (row of each
+    unique word in the float64 matrix, −1 when unused or OOV, matrix).
+    vf runs once per used word; float32 → float64 is exact."""
+    umap = np.full(len(uniques), -1, dtype=np.int64)
+    wvecs: list[np.ndarray] = []
+    for j in used:
+        v = vf(uniques[j])
+        if v is not None:
+            umap[j] = len(wvecs)
+            wvecs.append(v)
+    return umap, np.array(wvecs, dtype=np.float64).reshape(-1, spec.EMBED_DIM)
+
+
+def _segment_centroids(M: np.ndarray, rows: np.ndarray, vstarts: np.ndarray):
+    """Yields (start, end, float32 centroids of segments start..end-1),
+    segment s being M[rows[vstarts[s]:vstarts[s+1]]] (the zero vector
+    when empty), in chunks whose gathered rows fit
+    MAX_CTX_ROWS_PER_CHUNK; an oversized segment is a chunk alone."""
+    start, n = 0, len(vstarts) - 1
+    while start < n:
+        end = max(
+            start + 1,
+            int(
+                np.searchsorted(
+                    vstarts, vstarts[start] + MAX_CTX_ROWS_PER_CHUNK, side="right"
+                )
+            )
+            - 1,
+        )
+        counts = np.diff(vstarts[start : end + 1])
+        cents = np.zeros((end - start, spec.EMBED_DIM), dtype=np.float32)
+        mask = counts > 0
+        if mask.any():
+            W = M[rows[vstarts[start] : vstarts[end]]]
+            starts = vstarts[start:end] - vstarts[start]
+            cents[mask] = spec.centroid_batch(W, starts[mask], counts[mask])
+        yield start, end, cents
+        start = end
 
 
 def _pick_batch(
@@ -332,13 +384,7 @@ def _centroid_cosines(found_by_row, meta, mid_a, eidx_a, E, vf, interned):
         used = np.unique(codes[a_pos])
     else:
         used = np.zeros(0, dtype=np.int64)
-    wvecs: list[np.ndarray] = []
-    umap = np.full(len(uniques), -1, dtype=np.int64)
-    for j in used:
-        v = vf(uniques[j])
-        if v is not None:
-            umap[j] = len(wvecs)
-            wvecs.append(v)
+    umap, M = _word_matrix(uniques, used, vf)
     idx_flat = umap[codes]
     n_mentions = len(meta)
     # vectorized context assembly: every mention's context is two
@@ -374,41 +420,13 @@ def _centroid_cosines(found_by_row, meta, mid_a, eidx_a, E, vf, interned):
     else:
         ctx_valid = np.zeros(0, dtype=np.int64)
         ctx_counts = np.zeros(n_mentions, dtype=np.int64)
-    M = (
-        np.stack(wvecs, dtype=np.float64)
-        if wvecs
-        else np.zeros((0, spec.EMBED_DIM), dtype=np.float64)
-    )
     cos = np.empty(len(mid_a), dtype=np.float64)
     vstarts = np.concatenate(([0], np.cumsum(ctx_counts)))
-    start = 0
-    while start < n_mentions:
-        # maximal chunk whose valid-context rows fit the memory bound
-        # (an oversized single mention still gets its own chunk)
-        end = max(
-            start + 1,
-            int(
-                np.searchsorted(
-                    vstarts,
-                    vstarts[start] + MAX_CTX_ROWS_PER_CHUNK,
-                    side="right",
-                )
-            )
-            - 1,
-        )
-        counts_c = ctx_counts[start:end]
-        rows = int(vstarts[end] - vstarts[start])
-        cents = np.zeros((end - start, spec.EMBED_DIM), dtype=np.float32)
-        mask = counts_c > 0
-        if rows:
-            W = M[ctx_valid[vstarts[start] : vstarts[end]]]
-            starts_c = vstarts[start:end] - vstarts[start]
-            cents[mask] = spec.centroid_batch(W, starts_c[mask], counts_c[mask])
+    for start, end, cents in _segment_centroids(M, ctx_valid, vstarts):
         # candidates of this mention chunk (mid_a is nondecreasing)
         c0 = int(np.searchsorted(mid_a, start, side="left"))
         c1 = int(np.searchsorted(mid_a, end, side="left"))
         cos[c0:c1] = spec.cosine_batch(cents[mid_a[c0:c1] - start], E[eidx_a[c0:c1]])
-        start = end
     return cos
 
 
@@ -565,12 +583,13 @@ NO_WINDOW = (None, None, frozenset())
 
 
 def emit_window_triples(
-    picked_by_row, conv_ids, turn_idxs, roles, tools, canon, carry
+    ents_by_row, conv_ids, turn_idxs, roles, tools, canon, carry
 ):
-    """The one turn-window triple rule of the Python kernels
-    (link_and_extract and the streaming processor; the staged path's
-    JVM twin is triples.extract_triples, the oracle's own copy is
-    oracle.run_oracle). Rows arrive turn-ordered per conversation; per
+    """The one turn-window triple rule: link_and_extract, the staged
+    triples.extract_triples and the streaming processor all run it
+    (only oracle.run_oracle keeps its own copy). ``ents_by_row`` holds
+    each row's entity ids, mapped through ``canon`` (ids it lacks map
+    to themselves). Rows arrive turn-ordered per conversation; per
     turn t with canonical entity set E_t:
 
     - (e, 'mentioned_by', role) and, on tool turns,
@@ -595,12 +614,12 @@ def emit_window_triples(
     ap_c, ap_t, ap_s = o_conv.append, o_turn.append, o_subj.append
     ap_p, ap_o = o_pred.append, o_obj.append
     canon_get = canon.get
-    for i, picked in enumerate(picked_by_row):
+    for i, ents in enumerate(ents_by_row):
         cid = conv_ids[i]
         tix = turn_idxs[i]
         if cid != prev_conv or tix - 1 != prev_turn:
             prev_set = frozenset()
-        cur = {canon_get(p[3], p[3]) for p in picked}
+        cur = {canon_get(e, e) for e in ents}
         tool = tools[i]
         if tool is not None and tool != tool:  # NaN guard
             tool = None
@@ -649,9 +668,9 @@ def link_and_extract(
 
     Semantics are identical to the staged path
     (link_mentions → canonicalize.rewrite_linked →
-    triples.extract_triples); tests assert all three agree with the
-    reference oracle. ``canon_bc`` broadcasts {entity_id:
-    canonical_id} (build_kb_broadcasts)."""
+    triples.extract_triples, the same emitter over one row per turn);
+    tests assert all three agree with the reference oracle.
+    ``canon_bc`` broadcasts {entity_id: canonical_id}."""
     # driver-side stable broadcast ids, captured into the closure
     cache_key = gaz_bc._jbroadcast.id()
     evec_key = evec_bc._jbroadcast.id()
@@ -669,7 +688,8 @@ def link_and_extract(
                 evec_key,
             )
             out, carry = emit_window_triples(
-                picked_by_row, pdf["conv_id"].tolist(),
+                ([p[3] for p in picked] for picked in picked_by_row),
+                pdf["conv_id"].tolist(),
                 pdf["turn_idx"].tolist(), pdf["role"].tolist(),
                 pdf["tool"].tolist(), canon, carry,
             )

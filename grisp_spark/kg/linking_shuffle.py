@@ -76,18 +76,18 @@ def first_token_index_table(labels: DataFrame) -> DataFrame:
 
 def entity_vectors_table(entities: DataFrame, wvec_bc=None) -> DataFrame:
     """(entity_id, vec float32[]) computed DISTRIBUTED — the same
-    spec.centroid(context_vocab) the driver-side
-    linking.build_kb_broadcasts runs, as a mapInPandas over the
-    entities table."""
+    linking.entity_vectors the driver-side linking.build_kb_broadcasts
+    runs, as a mapInPandas over the entities table."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
+        vec_fn = (
+            spec.store_vec_fn(wvec_bc.value)
+            if wvec_bc is not None
+            else linking._cached_word_vec
+        )
         for pdf in batches:
-            vecs = [
-                spec.centroid(list(vocab), vec_fn)
-                for vocab in pdf["context_vocab"]
-            ]
-            yield pd.DataFrame({"entity_id": pdf["entity_id"], "vec": vecs})
+            vecs = linking.entity_vectors(pdf["context_vocab"], vec_fn)
+            yield pd.DataFrame({"entity_id": pdf["entity_id"], "vec": list(vecs)})
 
     return entities.select("entity_id", "context_vocab").mapInPandas(
         run, schema="entity_id long, vec array<float>"

@@ -17,12 +17,13 @@ Run via spark-submit --py-files grisp_spark.zip as
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from grisp_spark.kg import (
@@ -30,11 +31,19 @@ from grisp_spark.kg import (
     linking,
     linking_shuffle,
     materialize,
+    spec,
     stats,
     triples as triples_mod,
 )
 
 LINEAGE_DIR = "_lineage"
+
+# every floor(score * 10): scores lie in [-CONTEXT_WEIGHT, PRIOR_WEIGHT
+# + CONTEXT_WEIGHT], plus one decile below for a cosine rounded past -1
+SCORE_DECILES = range(
+    math.floor(-spec.CONTEXT_WEIGHT * 10) - 1,
+    math.floor((spec.PRIOR_WEIGHT + spec.CONTEXT_WEIGHT) * 10) + 1,
+)
 
 
 class Lineage:
@@ -125,13 +134,6 @@ class KGPipeline:
         return {n: self._read(n) for n in ("entities", "aliases", "label_stats")}
 
     # -- stage 1: linked mentions (bucket-resumable Arrow stage) -----------
-    LINKED_READ_SCHEMA = linking.LINKED_SCHEMA + ", bucket int"
-
-    def _read_linked(self, out: str) -> DataFrame:
-        # explicit schema: a bucket with zero mentions writes a
-        # schema-less (empty) parquet dir, which breaks inference
-        return self.spark.read.schema(self.LINKED_READ_SCHEMA).parquet(out)
-
     def stage_linked(self, resume: bool = True) -> DataFrame:
         out = os.path.join(self.out_dir, "linked")
         stage = "linked"
@@ -168,11 +170,23 @@ class KGPipeline:
                 self.kb(), self.n_partitions,
                 broadcast_label_limit=self.broadcast_label_limit,
             )
+            rows_in = dict(conv.groupBy("bucket").count().collect())
             for b in todo:
                 t0 = time.monotonic()
                 part = conv.filter(F.col("bucket") == b).drop("bucket")
-                rows_in = part.count()
-                linked_b = link(part).withColumn("bucket", F.lit(b))
+                # lineage metrics ride the write, as in _stage: row
+                # count, conv_id range, link-score decile histogram
+                obs = Observation(f"{stage}_{b}")
+                linked_b = link(part).observe(
+                    obs,
+                    F.count(F.lit(1)).alias("rows_out"),
+                    F.min("conv_id").alias("cmin"),
+                    F.max("conv_id").alias("cmax"),
+                    *(
+                        F.count_if(F.floor(F.col("score") * 10) == d).alias(str(d))
+                        for d in SCORE_DECILES
+                    ),
+                ).withColumn("bucket", F.lit(b))
                 # dynamic partition overwrite: replaces ONLY bucket=b,
                 # so a bucket that crashed mid-write (files on disk,
                 # no lineage record) is cleanly rewritten on resume
@@ -183,33 +197,18 @@ class KGPipeline:
                     .partitionBy("bucket")
                     .parquet(out)
                 )
-                written = self._read_linked(out).filter(F.col("bucket") == b)
-                # per-bucket lineage metrics in ONE aggregation pass:
-                # row count, conv_id range, link-score decile
-                # histogram (north-star lineage: "conv_id range,
-                # input/output counts, link-score histograms")
-                hist_col = F.floor(F.col("score") * 10).cast("int")
-                m = (
-                    written.withColumn("decile", hist_col)
-                    .groupBy("decile")
-                    .agg(
-                        F.count("*").alias("n"),
-                        F.min("conv_id").alias("cmin"),
-                        F.max("conv_id").alias("cmax"),
-                    )
-                    .collect()
-                )
-                rows_out = sum(int(r["n"]) for r in m)
+                m = obs.get
                 self.lineage.record(
-                    stage, b, rows_in, rows_out,
+                    stage, b, rows_in.get(b, 0), m["rows_out"],
                     int((time.monotonic() - t0) * 1000),
-                    conv_id_range=[
-                        min((r["cmin"] for r in m), default=None),
-                        max((r["cmax"] for r in m), default=None),
-                    ],
-                    score_histogram={str(r["decile"]): int(r["n"]) for r in m},
+                    conv_id_range=[m["cmin"], m["cmax"]],
+                    score_histogram={
+                        str(d): m[str(d)] for d in SCORE_DECILES if m[str(d)]
+                    },
                 )
-        return self._read_linked(out)
+        # explicit schema: a bucket with zero mentions writes a
+        # schema-less (empty) parquet dir, which breaks inference
+        return self.spark.read.schema(linking.LINKED_SCHEMA + ", bucket int").parquet(out)
 
     # -- downstream stages (stage-granular resume) --------------------------
     def _stage(
@@ -234,8 +233,6 @@ class KGPipeline:
         # observe() rides the write action (the Hadoop-counter
         # replacement from SURVEY §7) — no second scan of the output
         # just to count rows for lineage
-        from pyspark.sql import Observation
-
         obs = Observation(f"{name}_rows")
         df = df.observe(obs, F.count(F.lit(1)).alias("rows_out"))
         shutil.rmtree(out, ignore_errors=True)

@@ -18,15 +18,14 @@ from collections.abc import Iterable, Iterator
 import pandas as pd
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-OUTPUT_SCHEMA = "conv_id string, turn_idx int, subj long, pred string, obj string"
+from grisp_spark.kg import linking
+
 STATE_SCHEMA = "last_turn int, ents array<long>"
 
 
 def make_processor(gaz_bc, evec_bc, canon_bc):
     """Returns the applyInPandasWithState function closed over the
     broadcast KB structures."""
-    from grisp_spark.kg import linking
-
     # driver-side stable broadcast ids — the executor-local index and
     # entity-vector pack cache keys (process() is invoked once PER
     # CONVERSATION GROUP per micro-batch; rebuilding either each time
@@ -59,7 +58,8 @@ def make_processor(gaz_bc, evec_bc, canon_bc):
             evec_key,
         )
         out, (_conv, last_turn, prev_set) = linking.emit_window_triples(
-            picked_by_row, rows["conv_id"].tolist(), rows["turn_idx"].tolist(),
+            ([p[3] for p in picked] for picked in picked_by_row),
+            rows["conv_id"].tolist(), rows["turn_idx"].tolist(),
             rows["role"].tolist(), rows["tool"].tolist(), canon_bc.value, carry,
         )
         state.update((last_turn, sorted(prev_set)))
@@ -74,7 +74,7 @@ def streaming_triples(stream_conv, gaz_bc, evec_bc, canon_bc):
         stream_conv.groupBy("conv_id")
         .applyInPandasWithState(
             make_processor(gaz_bc, evec_bc, canon_bc),
-            outputStructType=OUTPUT_SCHEMA,
+            outputStructType=linking.TRIPLES_SCHEMA,
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             # NoTimeout keeps the drained stream quiescent (a timeout

@@ -114,10 +114,14 @@ def test_canonical_map_parity(pipeline_result, oracle_result):
 
 def test_lineage_metrics(pipeline_result):
     """Lineage records carry the north-star per-partition metrics:
-    conv_id range + link-score histogram, counts consistent."""
+    conv_id range + link-score histogram, counts consistent, and each
+    histogram equal to one recomputed from the bucket's written rows."""
     import json
     import os
 
+    from pyspark.sql import functions as F
+
+    linked = pipeline_result["linked"]
     ldir = os.path.join(OUT, "_lineage")
     recs = [
         json.load(open(os.path.join(ldir, f)))
@@ -133,8 +137,17 @@ def test_lineage_metrics(pipeline_result):
         assert (lo is None) == (r["rows_out"] == 0)
         if lo is not None:
             assert lo <= hi
+        written = (
+            linked.filter(F.col("bucket") == r["bucket"])
+            .groupBy(F.floor(F.col("score") * 10).alias("decile"))
+            .count()
+            .collect()
+        )
+        assert r["score_histogram"] == {
+            str(w["decile"]): w["count"] for w in written
+        }
         total_hist += r["rows_out"]
-    assert total_hist == pipeline_result["linked"].count()
+    assert total_hist == linked.count()
 
 
 def test_entity_tables_bucket_partitioned(pipeline_result):
@@ -228,8 +241,11 @@ def test_fused_matches_staged_and_oracle(spark, dataset, pipeline_result, oracle
 
 def test_fused_batch_straddling(spark, dataset):
     """Window carry must survive pandas-batch boundaries: force
-    2-row Arrow batches so every conversation straddles batches."""
-    from grisp_spark.kg import linking
+    2-row Arrow batches so every conversation straddles batches, in
+    the fused kernel and in the staged triples stage (one row per
+    turn), which must both still give the normal-batch triples."""
+    from grisp_spark.kg import canonicalize, linking
+    from grisp_spark.kg.triples import extract_triples
 
     conv = spark.read.parquet(os.path.join(dataset, "conversations.parquet"))
     kb = {
@@ -237,18 +253,44 @@ def test_fused_batch_straddling(spark, dataset):
         for n in ("entities", "aliases", "label_stats")
     }
     gaz_bc, evec_bc, canon_bc = linking.build_kb_broadcasts(spark, kb)
+    staged = extract_triples(
+        canonicalize.rewrite_linked(
+            linking.link_mentions(conv, gaz_bc, evec_bc, 4),
+            canonicalize.canonical_map(kb["entities"]),
+        )
+    )
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
         tiny = _triples_set(
             linking.link_and_extract(conv, gaz_bc, evec_bc, canon_bc, 4)
         )
+        tiny_staged = _triples_set(staged)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
     normal = _triples_set(
         linking.link_and_extract(conv, gaz_bc, evec_bc, canon_bc, 4)
     )
     assert tiny == normal
+    assert tiny_staged == _triples_set(staged) == normal
+
+
+def test_staged_triples_leave_no_cache(spark, pipeline_result):
+    """The staged triples stage persists nothing: running it leaves
+    the context's persisted-RDD count where it was."""
+    from grisp_spark.kg import canonicalize
+    from grisp_spark.kg.triples import extract_triples
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    extract_triples(
+        canonicalize.rewrite_linked(
+            pipeline_result["linked"], pipeline_result["canonical_map"]
+        )
+    ).collect()
+    assert persisted() == before
 
 
 def test_lr_scoring_mode_parity(spark, dataset):

@@ -182,3 +182,28 @@ def test_seq_segment_sums_property():
                 assert np.array_equal(got[i], acc), (i, s, c)
 
     run()
+
+
+def test_entity_vectors_match_per_row_centroid(monkeypatch):
+    """linking.entity_vectors (one interning, one batched fold) is
+    bit-identical to per-row spec.centroid on a datagen KB, under the
+    pseudo-embedding and under a file-backed store, including an empty
+    vocabulary, an all-OOV one, and chunked folds (one vocabulary
+    larger than a chunk)."""
+    from grisp_spark.kg import datagen, linking
+
+    ents = datagen.generate_kb(seed=7, n_entities=120)["entities"]
+    oov = ["zzqx-oov-1", "zzqx-oov-2"]
+    vocabs = list(ents["context_vocab"]) + [[], oov]
+    words = sorted({w for v in vocabs for w in v} - set(oov))
+    store = spec.store_vec_fn({w: spec.word_vec(w) for w in words[::2]})
+    for vec_fn in (spec.word_vec, store):
+        expected = np.stack([spec.centroid(list(v), vec_fn) for v in vocabs])
+        got = linking.entity_vectors(vocabs, vec_fn)
+        assert got.dtype == np.float32
+        assert np.array_equal(got, expected)
+        assert not got[-2].any()  # empty vocabulary
+        assert got[-1].any() == (vec_fn is spec.word_vec)  # OOV under the store
+        monkeypatch.setattr(linking, "MAX_CTX_ROWS_PER_CHUNK", 5)
+        assert np.array_equal(linking.entity_vectors(vocabs, vec_fn), expected)
+        monkeypatch.undo()
