@@ -15,6 +15,8 @@ Modes:
                                          # broadcast) and its entity-
                                          # vector step alone, at 120
                                          # and 20k datagen entities
+  python bench_extra.py --pipeline       # warm staged KG build,
+                                         # KGPipeline.run(resume=False)
 
 Protocol mirrors bench.py (same warmups, same noop sink, same
 local[$SPARK_GRAFT_CPUS] master, same $SPARK_GRAFT_SF_DIR data) but
@@ -173,6 +175,56 @@ def kb_build(passes: int) -> dict:
     return out
 
 
+PIPELINE_CONVS = 1200
+
+
+def pipeline_run(passes: int) -> dict:
+    """Median wall ms over ``passes`` (after 2 warm-ups) of a whole
+    staged KG build, ``KGPipeline(...).run(resume=False)``, writing all
+    9 tables from a datagen corpus (seed 401, PIPELINE_CONVS
+    conversations) with one conversation bucket and ``n_partitions`` =
+    cores, the shape perfbench's kg_batch op runs. Steal CPU-s covers
+    the timed passes."""
+    import shutil
+    import tempfile
+
+    from grisp_spark.kg import datagen
+    from grisp_spark.kg.pipeline import KGPipeline
+    from grisp_spark.session import get_spark
+
+    spark = get_spark(
+        "bench_extra", cores=CPUS,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
+    tmp = tempfile.mkdtemp(prefix="pipeline_")
+    try:
+        data, out = os.path.join(tmp, "data"), os.path.join(tmp, "out")
+        datagen.write_dataset(data, seed=401, n_convs=PIPELINE_CONVS)
+
+        def once() -> float:
+            t0 = time.perf_counter()
+            KGPipeline(spark, data, out, n_buckets=1, n_partitions=CPUS).run(
+                resume=False
+            )
+            return time.perf_counter() - t0
+
+        for _ in range(2):
+            once()
+        s0 = _steal()
+        secs = sorted(once() for _ in range(passes))
+        s1 = _steal()
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return {
+        "pipeline_run_ms": round(1000 * secs[len(secs) // 2], 1),
+        "pipeline_run_all_ms": [round(1000 * x, 1) for x in secs],
+        "steal_cpu_s": (
+            round((s1 - s0) / 100.0, 1) if s0 is not None and s1 is not None else None
+        ),
+        "convs": PIPELINE_CONVS, "passes": passes, "warmups": 2, "cores": CPUS,
+    }
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--queries", default=None)
@@ -181,6 +233,7 @@ def main() -> None:
     ap.add_argument("--all", action="store_true")
     ap.add_argument("--task-overhead", action="store_true")
     ap.add_argument("--kb-build", action="store_true")
+    ap.add_argument("--pipeline", action="store_true")
     args = ap.parse_args()
 
     if args.task_overhead:
@@ -188,6 +241,9 @@ def main() -> None:
         return
     if args.kb_build:
         print(json.dumps(kb_build(max(args.passes, 5))), flush=True)
+        return
+    if args.pipeline:
+        print(json.dumps(pipeline_run(max(args.passes, 5))), flush=True)
         return
 
     import __spark_entry__ as entry_mod

@@ -11,6 +11,22 @@ expensive Arrow linking stage is bucket-resumable; downstream
 shuffle stages are cheap relative to it and resume at stage
 granularity (whole-stage skip when complete).
 
+The reference runs its steps strictly in order (DumpExtractor.java:
+214-250). The stages here form a DAG instead, and ``run`` starts each
+one on its own thread as soon as the stages it reads have finished:
+
+    linked ──────────┬─▶ label_stats_out ─▶ entity_labels
+                     ▼
+    canonical_map ─▶ linked_canonical ─▶ triples ─▶ edges ─▶ adjacency
+    counters
+
+Every stage is a pure function of its input tables and writes its own
+directory, lineage file and ``.done`` marker, so any two stages
+where neither is downstream of the other can run at once, and resume
+stays per stage. A failed stage stops only the stages downstream of
+it. Because stages overlap, the lineage ``wall_ms`` values no longer
+add up to the run's wall time.
+
 Run via spark-submit --py-files grisp_spark.zip as
 ``python -m grisp_spark.kg.pipeline <data_dir> <out_dir>``."""
 
@@ -21,7 +37,10 @@ import math
 import os
 import shutil
 import time
+from concurrent.futures import Future, ThreadPoolExecutor, wait
 
+from py4j.protocol import Py4JJavaError
+from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -134,7 +153,9 @@ class KGPipeline:
         return {n: self._read(n) for n in ("entities", "aliases", "label_stats")}
 
     # -- stage 1: linked mentions (bucket-resumable Arrow stage) -----------
-    def stage_linked(self, resume: bool = True) -> DataFrame:
+    def stage_linked(
+        self, conv: DataFrame, kb: dict[str, DataFrame], resume: bool = True
+    ) -> DataFrame:
         out = os.path.join(self.out_dir, "linked")
         stage = "linked"
         # a bucket counts as done only if its lineage record AND its
@@ -156,7 +177,7 @@ class KGPipeline:
                     os.remove(os.path.join(self.lineage.dir, fn))
         todo = [b for b in range(self.n_buckets) if b not in done]
         if todo:
-            conv = self.conversations().withColumn(
+            conv = conv.withColumn(
                 "bucket", F.pmod(F.xxhash64("conv_id"), F.lit(self.n_buckets))
             )
             # the plan (broadcast dict while the gazetteer fits
@@ -167,15 +188,18 @@ class KGPipeline:
             # linker. Parity across regimes is pinned by
             # tests/test_kg_pipeline.py::test_pipeline_shuffle_regime.
             link = linking_shuffle.adaptive_linker(
-                self.kb(), self.n_partitions,
+                kb, self.n_partitions,
                 broadcast_label_limit=self.broadcast_label_limit,
             )
-            rows_in = dict(conv.groupBy("bucket").count().collect())
             for b in todo:
                 t0 = time.monotonic()
-                part = conv.filter(F.col("bucket") == b).drop("bucket")
-                # lineage metrics ride the write, as in _stage: row
-                # count, conv_id range, link-score decile histogram
+                # lineage metrics ride the write, as in _stage: input
+                # rows, row count, conv_id range, link-score decile
+                # histogram
+                obs_in = Observation(f"{stage}_{b}_in")
+                part = conv.filter(F.col("bucket") == b).drop("bucket").observe(
+                    obs_in, F.count(F.lit(1)).alias("rows_in")
+                )
                 obs = Observation(f"{stage}_{b}")
                 linked_b = link(part).observe(
                     obs,
@@ -198,8 +222,17 @@ class KGPipeline:
                     .parquet(out)
                 )
                 m = obs.get
+                try:
+                    rows_in = obs_in.get["rows_in"]
+                except Py4JJavaError:
+                    # the input is observed below the linker's layout
+                    # exchange; AQE drops that node from the final plan
+                    # when the operator above the exchange proves empty
+                    # (a sort over an empty bucket, a join with no
+                    # matched spans), so count the bucket instead
+                    rows_in = part.count()
                 self.lineage.record(
-                    stage, b, rows_in.get(b, 0), m["rows_out"],
+                    stage, b, rows_in, m["rows_out"],
                     int((time.monotonic() - t0) * 1000),
                     conv_id_range=[m["cmin"], m["cmax"]],
                     score_histogram={
@@ -282,57 +315,105 @@ class KGPipeline:
         if not resume:
             self.lineage.clear()
             self.lineage.check_config(n_buckets=self.n_buckets)
-        linked = self.stage_linked(resume)
-        kb = self.kb()
-
-        canon = self._stage(
-            "canonical_map", lambda: canonicalize.canonical_map(kb["entities"]), resume
-        )
-        linked_canon = self._stage(
-            "linked_canonical",
-            lambda: canonicalize.rewrite_linked(linked, canon),
-            resume,
-        )
-        trip = self._stage(
-            "triples",
-            lambda: triples_mod.extract_triples(linked_canon),
-            resume,
-        )
-        lstats = self._stage(
-            "label_stats_out",
-            lambda: stats.build_label_stats(
-                linked.select("conv_id", "turn_idx", "begin", "end", "surface"),
-                linked,
+        # each input is read once per run (a read infers its schema in
+        # a Spark job) and not kept on the instance, so the next run
+        # lists new input files
+        conv, kb = self.conversations(), self.kb()
+        ents = kb["entities"]
+        # the stage DAG: stage → (the stages whose tables it reads,
+        # materialize it from those tables), each after its inputs.
+        # Stages are called through self.<name> because perfbench
+        # times them by patching those names on the class.
+        dag = {
+            "linked": ((), lambda: self.stage_linked(conv, kb, resume)),
+            "canonical_map": ((), lambda: self._stage(
+                "canonical_map", lambda: canonicalize.canonical_map(ents), resume
+            )),
+            "counters": ((), lambda: self._stage(
+                "counters", lambda: materialize.global_counters(ents, conv), resume
+            )),
+            "linked_canonical": (
+                ("linked", "canonical_map"),
+                lambda linked, canon: self._stage(
+                    "linked_canonical",
+                    lambda: canonicalize.rewrite_linked(linked, canon),
+                    resume,
+                ),
             ),
-            resume,
-        )
-        edges = self._stage_entity_bucketed(
-            "edges", lambda: materialize.entity_edges(trip), "src", resume
-        )
-        adj = self._stage_entity_bucketed(
-            "adjacency", lambda: materialize.adjacency(edges), "id", resume
-        )
-        elabels = self._stage_entity_bucketed(
-            "entity_labels",
-            lambda: materialize.entity_labels(lstats),
-            "entity_id",
-            resume,
-        )
-        counters = self._stage(
-            "counters",
-            lambda: materialize.global_counters(kb["entities"], self.conversations()),
-            resume,
-        )
-        return {
-            "linked": linked,
-            "canonical_map": canon,
-            "triples": trip,
-            "label_stats": lstats,
-            "edges": edges,
-            "adjacency": adj,
-            "entity_labels": elabels,
-            "counters": counters,
+            "triples": (
+                ("linked_canonical",),
+                lambda linked_canon: self._stage(
+                    "triples", lambda: triples_mod.extract_triples(linked_canon), resume
+                ),
+            ),
+            "edges": (
+                ("triples",),
+                lambda trip: self._stage_entity_bucketed(
+                    "edges", lambda: materialize.entity_edges(trip), "src", resume
+                ),
+            ),
+            "adjacency": (
+                ("edges",),
+                lambda edges: self._stage_entity_bucketed(
+                    "adjacency", lambda: materialize.adjacency(edges), "id", resume
+                ),
+            ),
+            "label_stats_out": (
+                ("linked",),
+                lambda linked: self._stage(
+                    "label_stats_out",
+                    lambda: stats.build_label_stats(
+                        linked.select("conv_id", "turn_idx", "begin", "end", "surface"),
+                        linked,
+                    ),
+                    resume,
+                ),
+            ),
+            "entity_labels": (
+                ("label_stats_out",),
+                lambda lstats: self._stage_entity_bucketed(
+                    "entity_labels",
+                    lambda: materialize.entity_labels(lstats),
+                    "entity_id",
+                    resume,
+                ),
+            ),
         }
+        t = self._run_dag(dag)
+        return {
+            "linked": t["linked"],
+            "canonical_map": t["canonical_map"],
+            "triples": t["triples"],
+            "label_stats": t["label_stats_out"],
+            "edges": t["edges"],
+            "adjacency": t["adjacency"],
+            "entity_labels": t["entity_labels"],
+            "counters": t["counters"],
+        }
+
+    def _run_dag(self, dag: dict) -> dict[str, DataFrame]:
+        """Runs every stage of ``dag`` on its own thread as soon as its
+        inputs' tables exist; returns {stage: table}. Waits for every
+        stage, then raises the first failure in ``dag`` order; a stage
+        whose input failed fails with that input's exception and never
+        starts. Each task carries the caller's local properties
+        (pinned-thread mode), wrapped per stage so that no two threads
+        share one properties object."""
+        with ThreadPoolExecutor(len(dag), thread_name_prefix="kg-stage") as pool:
+            futures: dict[str, Future] = {}
+            for name, (inputs, start) in dag.items():
+                futures[name] = pool.submit(
+                    inheritable_thread_target(self.spark)(_after),
+                    [futures[i] for i in inputs],
+                    start,
+                )
+            wait(futures.values())
+            return {name: f.result() for name, f in futures.items()}
+
+
+def _after(inputs: list[Future], start):
+    """``start`` on the results of ``inputs``, once they all exist."""
+    return start(*(f.result() for f in inputs))
 
 
 def main() -> None:

@@ -46,6 +46,23 @@ def _triples_set(df):
     }
 
 
+def _rows_set(df):
+    return {
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.collect()
+    }
+
+
+def _turns_per_bucket(spark, dataset, n_buckets):
+    """{bucket: conversation turns}, recomputed from the input."""
+    from pyspark.sql import functions as F
+
+    conv = spark.read.parquet(os.path.join(dataset, "conversations.parquet"))
+    return dict(
+        conv.groupBy(F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets))).count().collect()
+    )
+
+
 def test_triples_pr_gate(pipeline_result, oracle_result):
     got = _triples_set(pipeline_result["triples"])
     expected = oracle_result["triples"]
@@ -112,7 +129,7 @@ def test_canonical_map_parity(pipeline_result, oracle_result):
     assert got[97] == 2
 
 
-def test_lineage_metrics(pipeline_result):
+def test_lineage_metrics(spark, dataset, pipeline_result):
     """Lineage records carry the north-star per-partition metrics:
     conv_id range + link-score histogram, counts consistent, and each
     histogram equal to one recomputed from the bucket's written rows."""
@@ -129,9 +146,10 @@ def test_lineage_metrics(pipeline_result):
         if f.startswith("linked.") and f.endswith(".json")
     ]
     assert len(recs) == 4
+    turns = _turns_per_bucket(spark, dataset, 4)
     total_hist = 0
     for r in recs:
-        assert r["rows_in"] > 0
+        assert r["rows_in"] == turns[r["bucket"]]
         assert sum(r["score_histogram"].values()) == r["rows_out"]
         lo, hi = r["conv_id_range"]
         assert (lo is None) == (r["rows_out"] == 0)
@@ -179,9 +197,13 @@ def test_empty_corpus_runs_and_resumes(spark, dataset):
     shutil.copytree(dataset, src)
     conv = pd.read_parquet(os.path.join(src, "conversations.parquet")).iloc[0:0]
     conv.to_parquet(os.path.join(src, "conversations.parquet"))
-    res = KGPipeline(spark, src, out, n_buckets=4, n_partitions=4).run(resume=False)
+    pipe = KGPipeline(spark, src, out, n_buckets=4, n_partitions=4)
+    res = pipe.run(resume=False)
     assert res["triples"].count() == 0
     assert res["linked"].count() == 0
+    assert {b: r["rows_in"] for b, r in pipe.lineage.done_buckets("linked").items()} == {
+        b: 0 for b in range(4)
+    }
     res2 = KGPipeline(spark, src, out, n_buckets=4, n_partitions=4).run(resume=True)
     assert res2["triples"].count() == 0
 
@@ -218,6 +240,11 @@ def test_pipeline_shuffle_regime(spark, dataset, pipeline_result):
     a = {tuple(r) for r in res["linked"].select(*cols).collect()}
     b = {tuple(r) for r in pipeline_result["linked"].select(*cols).collect()}
     assert a == b
+    # rows_in is exact in this plan too, which scans (and observes)
+    # each bucket's input more than once
+    assert {
+        b: r["rows_in"] for b, r in pipe.lineage.done_buckets("linked").items()
+    } == _turns_per_bucket(spark, dataset, 4)
     shutil.rmtree(out, ignore_errors=True)
 
 
@@ -485,6 +512,51 @@ def test_resume_after_midwrite_crash(spark, dataset, pipeline_result):
     )
     assert dups == 0
     assert _triples_set(result["triples"]) == baseline
+
+
+def test_resume_after_stage_failure(spark, dataset, pipeline_result, monkeypatch):
+    """A stage that fails (here edges) stops only the stages that read
+    it: the others still finish and mark themselves done, and a resume
+    rebuilds edges and adjacency alone, to the uninterrupted run's
+    tables."""
+    import shutil
+
+    from grisp_spark.kg import materialize
+
+    out = OUT + "_stage_failure"
+    shutil.rmtree(out, ignore_errors=True)
+    pipe = KGPipeline(spark, dataset, out, n_buckets=4, n_partitions=8)
+
+    def fail(triples):
+        raise RuntimeError("edges stage failed")
+
+    with monkeypatch.context() as m:
+        m.setattr(materialize, "entity_edges", fail)
+        with pytest.raises(RuntimeError, match="edges stage failed"):
+            pipe.run(resume=False)
+
+    def written():
+        ldir = pipe.lineage.dir
+        return {
+            fn: os.stat(os.path.join(ldir, fn)).st_mtime_ns
+            for fn in os.listdir(ldir)
+            if fn.endswith(".done") or fn.startswith("linked.")
+        }
+
+    before = written()
+    assert {fn for fn in before if fn.endswith(".done")} == {
+        f"{s}.done"
+        for s in ("canonical_map", "counters", "linked_canonical", "triples",
+                  "label_stats_out", "entity_labels")
+    }
+    result = pipe.run(resume=True)
+    after = written()
+    assert set(after) - set(before) == {"edges.done", "adjacency.done"}
+    assert {fn: after[fn] for fn in before} == before
+    assert _triples_set(result["triples"]) == _triples_set(pipeline_result["triples"])
+    for table in ("edges", "adjacency"):
+        assert _rows_set(result[table]) == _rows_set(pipeline_result[table])
+    shutil.rmtree(out, ignore_errors=True)
 
 
 def test_occ_doc_agg_null_doc_parity(spark):
