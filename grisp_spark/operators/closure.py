@@ -6,15 +6,18 @@ distributed equivalents here:
 
 - ``resolve_chains``: pointer jumping (ptr ← ptr∘ptr) — O(log L)
   shuffle-join rounds for chains of length L.
-- ``connected_components``: min-label propagation to fixpoint over
-  undirected edges — canonicalization for surface-form equivalence
-  (cycles are simply components; min-id is the canonical, a documented
-  deviation from grisp's -1-on-cycle).
+- ``connected_components``: large-star/small-star over undirected
+  edges — canonicalization for surface-form equivalence (cycles are
+  simply components; min-id is the canonical, a documented deviation
+  from grisp's -1-on-cycle).
 
-Both cut lineage every round with ``localCheckpoint`` so the plan
-doesn't grow exponentially — the per-round shuffle is keyed by node
-id, so at 100 TB the cost is rounds × one hash shuffle of the edge
-set, and AQE coalesces the (shrinking) frontier.
+Both first collect at most ``DRIVER_CC_THRESHOLD`` + 1 edges: that one
+job both picks the regime and, at or under the threshold, carries the
+whole edge list to a driver-side pass. Above it, the iterative rounds
+cut lineage every round with ``localCheckpoint`` so the plan doesn't
+grow exponentially — the per-round shuffle is keyed by node id, so at
+100 TB the cost is rounds × one hash shuffle of the edge set, and AQE
+coalesces the (shrinking) frontier.
 """
 
 from __future__ import annotations
@@ -25,11 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def resolve_chains(
-    edges: DataFrame,
-    max_rounds: int = 16,
-    driver_threshold: int | None = None,
-) -> DataFrame:
+def resolve_chains(edges: DataFrame, max_rounds: int = 16) -> DataFrame:
     """(src, dst) pointer table → (src, terminal). Terminal nodes are
     rows with src == dst (or dst absent from src column). Cycle-safe:
     pointer jumping converges inside a cycle to a fixed orbit; callers
@@ -38,50 +37,45 @@ def resolve_chains(
 
     Like ``connected_components``, redirect/pointer tables are usually
     broadcast-sized even on a 100 TB corpus (the reference's redirect
-    set is ~40M rows, RedirectCache.java:59) — below
-    ``driver_threshold`` edges (default DRIVER_CC_THRESHOLD) the chain
-    walk runs on the driver in one collect instead of O(log L)
-    iterative join rounds, each of which costs a full job of scheduling
-    latency (r8 measurement: the q13 chain graph resolves in 6 rounds
-    ≈ 12 jobs distributed vs 2 jobs on the driver). The driver walk
-    simulates the SAME pointer doubling (same max_rounds, same orbit
-    behavior on cycles), so results are identical in every regime; a
-    non-functional pointer table (duplicate src) falls back to the
-    distributed path, whose join semantics duplicates exercise."""
-    if driver_threshold is None:
-        driver_threshold = DRIVER_CC_THRESHOLD
-    if (
-        driver_threshold > 0
-        and edges.limit(driver_threshold + 1).count() <= driver_threshold
-    ):
-        pdf = edges.select("src", "dst").toPandas()
-        if not pdf["src"].duplicated().any():
-            spark = edges.sparkSession
-            ptr = dict(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
-            for _ in range(max_rounds):
-                moved = False
-                nxt = {}
-                for s, d in ptr.items():
-                    nd = ptr.get(d, d)
-                    if nd != d:
-                        moved = True
-                    nxt[s] = nd
-                ptr = nxt
-                if not moved:
-                    break
-            # Arrow path (pandas input): the list-of-tuples overload
-            # builds a PythonRDD whose tasks each need a pickle-mode
-            # python worker — a 32-fork spawn storm serialized on the
-            # SparkEnv.createPythonWorker monitor, measured 1.2-4.6 s
-            # inside q13's timed window (jstack evidence in
-            # OPTIMIZATION_r08.md). pandas → Arrow converts on the
-            # driver; the scan tasks stay pure JVM.
-            out = pd.DataFrame(
-                sorted((int(s), int(d)) for s, d in ptr.items()),
-                columns=["src", "terminal"],
-                dtype="int64",
-            )
-            return spark.createDataFrame(out, "src long, terminal long")
+    set is ~40M rows, RedirectCache.java:59) — at or under
+    DRIVER_CC_THRESHOLD edges the chain walk runs on the driver on the
+    edges ``_driver_edges`` already collected, instead of O(log L)
+    iterative join rounds, each of which costs a full job of
+    scheduling latency (the q13 chain graph resolves in 6 rounds ≈ 12
+    jobs distributed, measured in r8, vs 1 job on the driver). The
+    driver walk simulates the SAME pointer doubling (same max_rounds,
+    same orbit behavior on cycles), so results are identical in every
+    regime; a non-functional pointer table (duplicate src) falls back
+    to the distributed path, whose join semantics duplicates
+    exercise."""
+    pdf = _driver_edges(edges)
+    if pdf is not None and not pdf["src"].duplicated().any():
+        spark = edges.sparkSession
+        ptr = dict(zip(pdf["src"].tolist(), pdf["dst"].tolist()))
+        for _ in range(max_rounds):
+            moved = False
+            nxt = {}
+            for s, d in ptr.items():
+                nd = ptr.get(d, d)
+                if nd != d:
+                    moved = True
+                nxt[s] = nd
+            ptr = nxt
+            if not moved:
+                break
+        # Arrow path (pandas input): the list-of-tuples overload
+        # builds a PythonRDD whose tasks each need a pickle-mode
+        # python worker — a 32-fork spawn storm serialized on the
+        # SparkEnv.createPythonWorker monitor, measured 1.2-4.6 s
+        # inside q13's timed window (jstack evidence in
+        # OPTIMIZATION_r08.md). pandas → Arrow converts on the
+        # driver; the scan tasks stay pure JVM.
+        out = pd.DataFrame(
+            sorted((int(s), int(d)) for s, d in ptr.items()),
+            columns=["src", "terminal"],
+            dtype="int64",
+        )
+        return spark.createDataFrame(out, "src long, terminal long")
     cur = edges.select("src", "dst")
     for _ in range(max_rounds):
         a, b = cur.alias("a"), cur.alias("b")
@@ -154,6 +148,19 @@ def bfs_depth(
 DRIVER_CC_THRESHOLD = 2_000_000
 
 
+def _driver_edges(edges: DataFrame) -> pd.DataFrame | None:
+    """The regime decision and the driver path's input in ONE job:
+    collect at most DRIVER_CC_THRESHOLD + 1 (src, dst) rows. At or
+    under the threshold the frame IS the whole edge list; over it,
+    None and the caller goes distributed. The threshold is read at
+    call time. Cost above the threshold: up to 2M + 1 rows (~32 MB)
+    reach the driver and are dropped before the distributed path
+    starts — the price of a driver-regime call being one job rather
+    than a size-probe job plus a collect job."""
+    pdf = edges.select("src", "dst").limit(DRIVER_CC_THRESHOLD + 1).toPandas()
+    return pdf if len(pdf) <= DRIVER_CC_THRESHOLD else None
+
+
 def _canon_edges(df: DataFrame) -> DataFrame:
     """Distinct high→low orientation (src > dst), self-loops dropped."""
     return (
@@ -165,22 +172,29 @@ def _canon_edges(df: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    edges: DataFrame, max_rounds: int = 50
-) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14):
-    converges in O(log²·) rounds regardless of graph DIAMETER, unlike
-    min-label propagation whose round count is the diameter — the
-    web-scale path for long redirect/equivalence chains.
+def connected_components(edges: DataFrame, max_rounds: int = 50) -> DataFrame:
+    """Undirected edges (src, dst) → (id, component) with component =
+    min node id in the component. Every node appearing in ``edges``
+    (including self-loop-only nodes) gets a row.
 
-    Each round is two grouped aggregations + joins over the
-    (shrinking) edge set; at fixpoint every edge is (node, component
-    min), i.e. a star. Raises if ``max_rounds`` is exhausted before
-    the fixpoint — a non-star edge set would silently mislabel
-    components. Output contract matches connected_components: every
-    node appearing in ``edges`` (including self-loop-only nodes) gets
-    a row, isolated ones mapping to themselves."""
+    Equivalence graphs are usually broadcast-sized even when the
+    corpus is 100 TB (the reference's redirect set is ~40M rows,
+    RedirectCache.java:59) — at or under DRIVER_CC_THRESHOLD edges we
+    union-find on the driver in one pass over the edges
+    ``_driver_edges`` collected, the same driver-side-cache strategy
+    grisp uses for redirects (DumpExtractor.java:325-344).
+
+    Above it, large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14): O(log²·) rounds
+    regardless of graph diameter, where min-label propagation needs
+    ~diameter rounds. Each round is two grouped aggregations + joins
+    over the (shrinking) edge set; at fixpoint every edge is (node,
+    component min), i.e. a star. Raises if ``max_rounds`` is exhausted
+    before the fixpoint — a non-star edge set would silently mislabel
+    components."""
+    pdf = _driver_edges(edges)
+    if pdf is not None:
+        return _driver_union_find(edges.sparkSession, pdf)
     all_nodes = (
         edges.select(F.col("src").alias("id"))
         .union(edges.select(F.col("dst").alias("id")))
@@ -223,68 +237,21 @@ def connected_components_star(
             break
     if not converged:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} rounds"
+            f"connected_components did not converge in {max_rounds} rounds"
         )
     # fixpoint stars: (node → component min) for every non-root node;
     # nodes with no surviving edges (isolated / self-loop-only) map to
-    # themselves, like the union-find and propagation paths
+    # themselves, like the driver union-find
     roots = cur.select(F.col("dst").alias("id"), F.col("dst").alias("component"))
     members = cur.select(F.col("src").alias("id"), F.col("dst").alias("component"))
     stars = members.union(roots).distinct()
-    return all_nodes.join(stars, "id", "left").select(
-        "id", F.coalesce("component", "id").alias("component")
-    )
-
-
-def connected_components(
-    edges: DataFrame, max_rounds: int = 20, driver_threshold: int = DRIVER_CC_THRESHOLD
-) -> DataFrame:
-    """Undirected edges (src, dst) → (id, component) with component =
-    min node id in the component.
-
-    Equivalence graphs are usually broadcast-sized even when the
-    corpus is 100 TB (the reference's redirect set is ~40M rows,
-    RedirectCache.java:59) — below ``driver_threshold`` edges we
-    union-find on the driver in one pass, the same driver-side-cache
-    strategy grisp uses for redirects (DumpExtractor.java:325-344).
-    Above it, iterative min-label propagation to fixpoint; rounds
-    bounded by graph diameter — for graphs whose diameter itself is
-    web-scale, use ``connected_components_star`` (O(log²·) rounds)."""
-    if edges.limit(driver_threshold + 1).count() <= driver_threshold:
-        return _driver_union_find(edges)
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    sym = sym.distinct().localCheckpoint(eager=True)
-    nodes = (
-        sym.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("component", F.col("id"))
+    # eager: like the driver path, the result is materialized before
+    # returning, so callers may unpersist ``edges`` right after
+    return (
+        all_nodes.join(stars, "id", "left")
+        .select("id", F.coalesce("component", "id").alias("component"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
-        msgs = sym.join(nodes, sym.src == nodes.id).select(
-            F.col("dst").alias("id"), F.col("component")
-        )
-        new_nodes = (
-            nodes.select("id", "component")
-            .union(msgs)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"))
-            # non-eager: the changed-probe join below materializes it
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_nodes.alias("n")
-            .join(nodes.alias("o"), F.col("n.id") == F.col("o.id"))
-            .filter(F.col("n.component") != F.col("o.component"))
-            .limit(1)
-            .count()
-        )
-        nodes = new_nodes
-        if changed == 0:
-            break
-    return nodes
 
 
 def union_find_pairs(pairs) -> dict[int, int]:
@@ -310,10 +277,9 @@ def union_find_pairs(pairs) -> dict[int, int]:
     return {n: find(n) for n in parent}
 
 
-def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Exact same (id, component) contract, computed on the driver."""
-    spark = edges.sparkSession
-    pdf = edges.select("src", "dst").toPandas()
+def _driver_union_find(spark, pdf: pd.DataFrame) -> DataFrame:
+    """Exact same (id, component) contract, computed on the driver
+    from the collected (src, dst) frame."""
     comp = union_find_pairs(zip(pdf["src"], pdf["dst"]))
     # pandas input → Arrow conversion on the driver; the list overload
     # would spawn pickle-mode python workers per partition (see

@@ -11,8 +11,8 @@ Scale notes (100 TB):
 - ``dedup_survivors``: the pair set is orders of magnitude smaller
   than the corpus (it comes out of a bucketed candidate generator),
   so components are computed on the pairs only
-  (``operators/closure.py`` — driver union-find under 2M edges,
-  distributed min-label/star propagation above), and the survivor
+  (``operators/closure.py`` — driver union-find up to 2M edges,
+  distributed large-star/small-star above), and the survivor
   window runs ONLY on documents that appear in some pair
   (left-semi); the untouched majority of the corpus never enters a
   shuffle wider than the broadcast component map.
@@ -35,14 +35,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
-from grisp_spark.operators.closure import DRIVER_CC_THRESHOLD, connected_components
+from grisp_spark.operators import closure
 
 
-def dedup_survivors(
-    docs: DataFrame,
-    pairs: DataFrame,
-    broadcast_threshold: int = DRIVER_CC_THRESHOLD,
-) -> DataFrame:
+def dedup_survivors(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Collapse near-duplicate clusters to one survivor each.
 
     ``pairs`` is any (doc_a, doc_b) near-dup edge set (exact, MinHash,
@@ -56,20 +52,21 @@ def dedup_survivors(
     canonical page (RedirectStep.java:60-171) — same
     edges → components → canonical-representative shape."""
     # the pair frame is typically the query's heaviest stage (e.g. the
-    # n-gram Jaccard pipeline) and connected_components runs TWO
-    # actions on it (size probe + collect/iterate) — persist so it
-    # computes once; safe to unpersist right after because both CC
-    # paths materialize their result before returning
+    # n-gram Jaccard pipeline) and is read by the size probe below and
+    # again by connected_components (its regime collect, plus the
+    # rounds above the threshold) — persist so it computes once; safe
+    # to unpersist right after because both CC paths materialize their
+    # result before returning
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).persist()
     try:
-        # this probe and connected_components' internal one are the
-        # same count on the persisted frame (cheap); forwarding the
-        # threshold keeps the broadcast decision in lockstep with the
-        # driver-vs-distributed CC path choice
-        small = edges.limit(broadcast_threshold + 1).count() <= broadcast_threshold
-        comp = connected_components(edges, driver_threshold=broadcast_threshold)
+        # the same threshold connected_components reads, at call time,
+        # so the broadcast decision stays in step with its
+        # driver-vs-distributed choice
+        n = closure.DRIVER_CC_THRESHOLD
+        small = edges.limit(n + 1).count() <= n
+        comp = closure.connected_components(edges)
     finally:
         edges.unpersist()
     slim = docs.select("doc_id", "n_chars")

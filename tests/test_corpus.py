@@ -5,7 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from grisp_spark.operators import corpus
+from grisp_spark.operators import closure, corpus
 
 
 def _docs(spark, rows):
@@ -14,7 +14,7 @@ def _docs(spark, rows):
     )
 
 
-def test_survivors_longest_wins_ties_by_min_id(spark):
+def test_survivors_longest_wins_ties_by_min_id(spark, monkeypatch):
     docs = _docs(
         spark,
         [
@@ -27,16 +27,20 @@ def test_survivors_longest_wins_ties_by_min_id(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3)], "doc_a long, doc_b long"
     )
-    out = {
-        r["doc_id"]: (r["component"], r["survivor_id"], r["is_survivor"])
-        for r in corpus.dedup_survivors(docs, pairs).collect()
-    }
-    # cluster {1,2,3}: longest are 2 and 3 (30 chars), tie → min id 2
-    assert out[1] == (1, 2, False)
-    assert out[2] == (1, 2, True)
-    assert out[3] == (1, 2, False)
-    # untouched doc survives as its own singleton
-    assert out[9] == (9, 9, True)
+    # both CC regimes: driver union-find + broadcast hint, then (with
+    # the threshold at 0) distributed CC without the hint
+    for threshold in (closure.DRIVER_CC_THRESHOLD, 0):
+        monkeypatch.setattr(closure, "DRIVER_CC_THRESHOLD", threshold)
+        out = {
+            r["doc_id"]: (r["component"], r["survivor_id"], r["is_survivor"])
+            for r in corpus.dedup_survivors(docs, pairs).collect()
+        }
+        # cluster {1,2,3}: longest are 2 and 3 (30 chars), tie → min id 2
+        assert out[1] == (1, 2, False)
+        assert out[2] == (1, 2, True)
+        assert out[3] == (1, 2, False)
+        # untouched doc survives as its own singleton
+        assert out[9] == (9, 9, True)
 
 
 def test_pack_sequences_greedy_and_oversized(spark):

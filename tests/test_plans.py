@@ -190,11 +190,29 @@ def test_driver_graph_paths_build_local_relations(spark):
     The list-of-tuples createDataFrame overload compiles to a PythonRDD
     whose scan tasks each require a pickle-mode python worker — a
     32-fork spawn storm serialized on the SparkEnv.createPythonWorker
-    monitor, measured at 1.2-4.6 s inside q13's timed window."""
+    monitor, measured at 1.2-4.6 s inside q13's timed window.
+
+    Each call also submits exactly ONE Spark job: the bounded collect
+    that both picks the driver regime and carries the edges (no
+    separate size-probe job)."""
     from grisp_spark.operators.closure import connected_components, resolve_chains
 
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        # job-start events reach the status store through the async
+        # listener bus; drain it before counting
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
     edges = spark.range(6).selectExpr("id AS src", "id + 1 AS dst")
-    chains = resolve_chains(edges)
+    chains, n_jobs = jobs_of("closure_resolve_chains", lambda: resolve_chains(edges))
+    assert n_jobs == 1
     assert {(r.src, r.terminal) for r in chains.collect()} == {
         (i, 6) for i in range(6)
     }
@@ -202,7 +220,10 @@ def test_driver_graph_paths_build_local_relations(spark):
     assert "LocalTableScan" in plan, plan
     assert "ExistingRDD" not in plan, plan
 
-    comps = connected_components(edges)
+    comps, n_jobs = jobs_of(
+        "closure_connected_components", lambda: connected_components(edges)
+    )
+    assert n_jobs == 1
     assert {(r.id, r.component) for r in comps.collect()} == {
         (i, 0) for i in range(7)
     }
