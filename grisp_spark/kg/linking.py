@@ -13,15 +13,19 @@ instead of local LMDB files.
 
 Every linking path takes one route from the KB tables to the picked
 spans, and this module holds each step once: the KB builder
-(build_kb_broadcasts), the greedy detection loop (_detect_all over
-spec.detect_mentions_pruned), the linking core (_pick_batch, every
-score mode), the entity vectors (entity_vectors) and the turn-window
-emitter (emit_window_triples). The broadcast, fused, shuffle
-(kg/linking_shuffle.py, over a batch-local gazetteer slice) and
-streaming (streaming/stateful.py) kernels detect and score through
-them; the fused, staged (kg/triples.py) and streaming paths emit
-through the one emitter; linking_shuffle.adaptive_linker is the one
-broadcast-vs-shuffle decision. Only the oracle keeps its own copy.
+(build_kb_broadcasts), the KB view (_kb_view: gazetteer, first-token
+index, entity-vector pack), the one linking entry point
+(_link_tokens: _intern_tokens → _detect_all over
+spec.detect_mentions_pruned → _pick_all, every score mode), the
+entity vectors (entity_vectors) and the turn-window emitter
+(emit_window_triples). The broadcast, fused and streaming
+(streaming/stateful.py) kernels link through _broadcast_linker, one
+cached executor view per broadcast pair; the shuffle kernel
+(kg/linking_shuffle.py) calls _link_tokens over a batch-local
+gazetteer slice. The fused, staged (kg/triples.py) and streaming
+paths emit through the one emitter; linking_shuffle.adaptive_linker
+is the one broadcast-vs-shuffle decision. Only the oracle keeps its
+own copy.
 
 Scale notes (100 TB): the broadcast gazetteer is the working-set
 bound (reference sizes: ~64M labels, LabelCache.java:46). A python
@@ -48,21 +52,6 @@ LINKED_SCHEMA = (
 
 # Executor-local memo for word vectors (deterministic → cache-safe).
 _WORD_VEC_CACHE: dict[str, np.ndarray] = {}
-
-# Executor-local first-token index cache, keyed by the BROADCAST id
-# (stable and unique per broadcast). Never key by id(obj): a reused
-# python worker can see a new gazetteer allocated at a freed object's
-# address, and the stale index silently matches nothing.
-_IDX_CACHE: dict[int, dict[str, int]] = {}
-
-
-def _first_token_index(gaz: dict, cache_key: int) -> dict[str, int]:
-    idx = _IDX_CACHE.get(cache_key)
-    if idx is None:
-        idx = spec.build_first_token_index(gaz)
-        _IDX_CACHE.clear()
-        _IDX_CACHE[cache_key] = idx
-    return idx
 
 
 def _cached_word_vec(w: str) -> np.ndarray:
@@ -182,18 +171,13 @@ def build_kb_broadcasts(spark: SparkSession, kb: dict[str, DataFrame], wvec_bc=N
 build_broadcasts = build_kb_broadcasts
 
 
-# Executor-local packed entity-vector matrix, keyed by the evec
-# broadcast id (same rationale as _IDX_CACHE).
-_EVEC_PACK_CACHE: dict[int, tuple] = {}
-
-
 def _build_evec_pack(evecs: dict):
     """{entity_id: vector} → ({entity_id: row}, float64 matrix).
     Stored float64 (exact embedding of the float32 vectors) so the
-    per-candidate gather feeds cosine_batch conversion-free. Trailing
-    ZERO row: a sense whose entity_id has no entities row
+    per-candidate gather feeds both context scorers conversion-free.
+    Trailing ZERO row: a sense whose entity_id has no entities row
     (referential-integrity violation in the KB) scores with the zero
-    vector — spec.centroid's empty-vocab result and the shuffle path's
+    vector — spec.entity_vec's default and the shuffle path's
     left-join default — instead of KeyError-ing."""
     eids = sorted(evecs)
     rows = [evecs[e] for e in eids]
@@ -201,12 +185,12 @@ def _build_evec_pack(evecs: dict):
     return {e: i for i, e in enumerate(eids)}, np.stack(rows, dtype=np.float64)
 
 
-def _evec_pack(evecs: dict, cache_key: int):
-    pack = _EVEC_PACK_CACHE.get(cache_key)
-    if pack is None:
-        _EVEC_PACK_CACHE.clear()
-        _EVEC_PACK_CACHE[cache_key] = pack = _build_evec_pack(evecs)
-    return pack
+def _kb_view(gaz: dict, evecs: dict):
+    """The KB view every kernel links over: (gazetteer, first-token
+    index, entity-vector pack). Built once per executor per broadcast
+    pair (_broadcast_linker) or once per batch slice (the shuffle
+    kernel)."""
+    return gaz, spec.build_first_token_index(gaz), _build_evec_pack(evecs)
 
 
 # memory budget for one scoring chunk: flattened context vectors are
@@ -256,26 +240,26 @@ def _segment_centroids(M: np.ndarray, rows: np.ndarray, vstarts: np.ndarray):
         start = end
 
 
-def _pick_batch(
-    tokens_by_row, found_by_row, gaz, evecs, evec_pack, score_mode, vec_fn,
-    interned=None,
+def _pick_all(
+    tokens_by_row, found_by_row, gaz, evec_pack, score_mode, vec_fn, interned
 ):
     """The one Python linking core: candidate scoring + argmax for
     every detected span of a WHOLE batch, in every spec.SCORE_MODES
-    mode. The broadcast, fused, shuffle and streaming kernels all pick
-    through it; only the oracle scores independently.
+    mode. Every kernel picks through it (via _link_tokens); only the
+    oracle scores independently.
 
     Each distinct surface gets one candidate template (eidx row,
     entity id, prior) per batch — hot surfaces repeat constantly, and
     the prior division is identical whichever mention triggers it.
     Context scores then come per mode: ``prior`` needs none;
     ``lr`` builds spec.lr_context_matrix once per mention and scores
-    each candidate with spec.lr_score_from_matrix (the oracle's
-    np.sum/BLAS order); ``centroid`` runs the batched
-    _centroid_cosines. One spec.score_candidates_batch and one
-    spec.pick_batch lexsort pick every mention's sense.
-    Returns picked_by_row: per row, (begin, end, surface, entity_id,
-    score) in span order."""
+    each candidate's pack row with spec.lr_score_from_matrix (the
+    oracle's np.sum/BLAS order; the float64 row is the exact float32
+    vector, and a dangling entity's trailing zero row equals
+    spec.ZERO_VEC); ``centroid`` runs the batched _centroid_cosines.
+    One spec.score_candidates_batch and one spec.pick_batch lexsort
+    pick every mention's sense. Returns picked_by_row: per row,
+    (begin, end, surface, entity_id, score) in span order."""
     if score_mode not in spec.SCORE_MODES:
         raise ValueError(f"unknown score_mode {score_mode!r} (see spec.SCORE_MODES)")
     picked_by_row: list[list] = [[] for _ in tokens_by_row]
@@ -317,15 +301,11 @@ def _pick_batch(
         np.asarray(cand_counts, dtype=np.int64),
     )
     eid_a = np.concatenate(eid_parts)
+    eidx_a = np.concatenate(eidx_parts)
     prior_a = np.concatenate(prior_parts)
     vf = vec_fn or _cached_word_vec
     if score_mode == "centroid":
-        if interned is None:
-            interned = _intern_tokens(tokens_by_row)
-        ctx_a = _centroid_cosines(
-            found_by_row, meta, mid_a, np.concatenate(eidx_parts), E, vf,
-            interned,
-        )
+        ctx_a = _centroid_cosines(found_by_row, meta, mid_a, eidx_a, E, vf, interned)
     elif score_mode == "lr":
         ctx_a = np.empty(len(eid_a), dtype=np.float64)
         c = 0
@@ -333,9 +313,7 @@ def _pick_batch(
             tokens = tokens_by_row[row_i]
             mat = spec.lr_context_matrix(tokens[:begin] + tokens[end:], vf)
             for k in range(c, c + n_cand):
-                ctx_a[k] = spec.lr_score_from_matrix(
-                    mat, spec.entity_vec(evecs, int(eid_a[k]))
-                )
+                ctx_a[k] = spec.lr_score_from_matrix(mat, E[eidx_a[k]])
             c += n_cand
     else:
         ctx_a = None  # prior mode scores by the anchor prior alone
@@ -430,18 +408,6 @@ def _centroid_cosines(found_by_row, meta, mid_a, eidx_a, E, vf, interned):
     return cos
 
 
-def _pick_all(
-    tokens_by_row, found_by_row, gaz, evecs, score_mode, vec_fn, evec_key,
-    interned=None,
-):
-    """_pick_batch over the broadcast KB (entity-vector pack cached
-    per executor by the evec broadcast id)."""
-    return _pick_batch(
-        tokens_by_row, found_by_row, gaz, evecs, _evec_pack(evecs, evec_key),
-        score_mode, vec_fn, interned,
-    )
-
-
 def _intern_tokens(tokens_by_row):
     """One C-speed factorize over the batch's tokens: (codes, uniques,
     row offsets). Shared by detection (per-distinct-token prune
@@ -485,46 +451,67 @@ def _detect_all(tokens_by_row, gaz, idx, interned):
     return found_by_row
 
 
-def _link_rows(texts, gaz, evecs, idx, score_mode, vec_fn, evec_key):
-    """Shared kernel prelude: tokenize → batch-interned detection →
-    batch scoring. ``texts`` is a plain list of strings (guide §4: the
-    kernels iterate bare column lists, not itertuples rows — pandas
-    row tuples materialize every cell, Timestamps included, at ~1 µs
-    per row·column). Returns picked_by_row."""
-    tokens_by_row = [spec.tokenize(t or "") for t in texts]
+def _link_tokens(tokens_by_row, view, score_mode, vec_fn):
+    """The one linking entry point of every kernel: batch interning →
+    detection → picking over ``view`` = (gazetteer, first-token
+    index, entity-vector pack), see _kb_view. The steps are looked up
+    as module attributes on every call (the traced benchmark run
+    times them by patching those names). Returns picked_by_row."""
+    gaz, idx, evec_pack = view
     interned = _intern_tokens(tokens_by_row)
     found_by_row = _detect_all(tokens_by_row, gaz, idx, interned)
     return _pick_all(
-        tokens_by_row, found_by_row, gaz, evecs, score_mode, vec_fn,
-        evec_key, interned,
+        tokens_by_row, found_by_row, gaz, evec_pack, score_mode, vec_fn, interned
     )
+
+
+# Executor-local KB view of the broadcast kernels: ONE entry, keyed by
+# the (gazetteer, entity-vector) broadcast id pair, see _broadcast_linker.
+_VIEW_CACHE: dict[tuple[int, int], tuple] = {}
+
+
+def _broadcast_linker(gaz_bc, evec_bc, score_mode, wvec_bc):
+    """Captures both broadcast ids on the driver and returns
+    ``link(texts) → picked_by_row``: tokenize, then _link_tokens over
+    the executor's cached _kb_view of the two broadcasts. ``texts``
+    is a plain list of strings (guide §4: the kernels iterate bare
+    column lists, not itertuples rows — pandas row tuples materialize
+    every cell, Timestamps included, at ~1 µs per row·column).
+
+    The view is cached by the BROADCAST ids (stable and unique per
+    broadcast), never by id(obj): a reused python worker can see a
+    new gazetteer allocated at a freed object's address, and a stale
+    index silently matches nothing. And it must be cached at all:
+    the streaming process() calls ``link`` once per conversation
+    group per micro-batch, so an uncached view would rescan the whole
+    KB per group."""
+    key = (gaz_bc._jbroadcast.id(), evec_bc._jbroadcast.id())
+
+    def link(texts):
+        view = _VIEW_CACHE.get(key)
+        if view is None:
+            _VIEW_CACHE.clear()
+            _VIEW_CACHE[key] = view = _kb_view(gaz_bc.value, evec_bc.value)
+        vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
+        tokens_by_row = [spec.tokenize(t or "") for t in texts]
+        return _link_tokens(tokens_by_row, view, score_mode, vec_fn)
+
+    return link
 
 
 def linked_frame(picked_by_row, pdf: pd.DataFrame) -> pd.DataFrame:
     """picked_by_row + the batch's (conv_id, turn_idx, role, tool)
     columns → one LINKED_SCHEMA frame — the output step shared by the
-    broadcast and shuffle linking kernels."""
-    conv_ids = pdf["conv_id"].tolist()
-    turn_idxs = pdf["turn_idx"].tolist()
-    roles = pdf["role"].tolist()
-    tools = pdf["tool"].tolist()
-    out: dict[str, list] = {
-        "conv_id": [], "turn_idx": [], "role": [], "tool": [],
-        "begin": [], "end": [], "surface": [], "entity_id": [],
-        "score": [],
-    }
-    for i, picked in enumerate(picked_by_row):
-        for begin, end, surface, eid, score in picked:
-            out["conv_id"].append(conv_ids[i])
-            out["turn_idx"].append(turn_idxs[i])
-            out["role"].append(roles[i])
-            out["tool"].append(tools[i])
-            out["begin"].append(begin)
-            out["end"].append(end)
-            out["surface"].append(surface)
-            out["entity_id"].append(eid)
-            out["score"].append(score)
-    return pd.DataFrame(out)
+    broadcast and shuffle linking kernels. The batch columns are
+    gathered with one row index (row i repeated once per pick)."""
+    rows = np.repeat(
+        np.arange(len(picked_by_row)), [len(p) for p in picked_by_row]
+    )
+    out = pdf[["conv_id", "turn_idx", "role", "tool"]].take(rows).reset_index(drop=True)
+    picks = list(zip(*(m for picked in picked_by_row for m in picked))) or [()] * 5
+    for name, col in zip(("begin", "end", "surface", "entity_id", "score"), picks):
+        out[name] = list(col)
+    return out
 
 
 def _conv_layout(conv: DataFrame, n_partitions: int | None) -> DataFrame:
@@ -557,21 +544,11 @@ def link_mentions(
     north-rule layout: each conversation contiguous and ordered inside
     a partition, mirroring grisp's one-page-per-map-call atomicity,
     LabelSensesStep.java:199-311)."""
-    # driver-side stable broadcast ids, captured into the closure
-    cache_key = gaz_bc._jbroadcast.id()
-    evec_key = evec_bc._jbroadcast.id()
+    link = _broadcast_linker(gaz_bc, evec_bc, score_mode, wvec_bc)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz = gaz_bc.value
-        evecs = evec_bc.value
-        vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
-        idx = _first_token_index(gaz, cache_key)
         for pdf in batches:
-            picked_by_row = _link_rows(
-                pdf["text"].tolist(), gaz, evecs, idx, score_mode, vec_fn,
-                evec_key,
-            )
-            yield linked_frame(picked_by_row, pdf)
+            yield linked_frame(link(pdf["text"].tolist()), pdf)
 
     return _conv_layout(conv, n_partitions).mapInPandas(run, schema=LINKED_SCHEMA)
 
@@ -671,22 +648,13 @@ def link_and_extract(
     triples.extract_triples, the same emitter over one row per turn);
     tests assert all three agree with the reference oracle.
     ``canon_bc`` broadcasts {entity_id: canonical_id}."""
-    # driver-side stable broadcast ids, captured into the closure
-    cache_key = gaz_bc._jbroadcast.id()
-    evec_key = evec_bc._jbroadcast.id()
+    link = _broadcast_linker(gaz_bc, evec_bc, score_mode, wvec_bc)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        gaz = gaz_bc.value
-        evecs = evec_bc.value
         canon = canon_bc.value
-        vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
-        idx = _first_token_index(gaz, cache_key)
         carry = NO_WINDOW
         for pdf in batches:
-            picked_by_row = _link_rows(
-                pdf["text"].tolist(), gaz, evecs, idx, score_mode, vec_fn,
-                evec_key,
-            )
+            picked_by_row = link(pdf["text"].tolist())
             out, carry = emit_window_triples(
                 ([p[3] for p in picked] for picked in picked_by_row),
                 pdf["conv_id"].tolist(),

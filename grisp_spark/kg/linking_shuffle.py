@@ -17,13 +17,14 @@ linked-mention rows with the KB kept DISTRIBUTED end to end:
    equi-join them against the per-label sense table (sort-merge at
    scale — uniform string keys, AQE handles residual skew);
 4. re-group matched spans per turn; one Arrow kernel turns the
-   batch's spans into a {surface: senses} slice (plus an
-   entity-vector pack) and runs the broadcast path's own detection
-   (``linking._detect_all``) and scorer (``linking._pick_batch``)
-   over it. The slice holds every gazetteer n-gram occurring in the
-   batch (the JVM already dropped F6 apostrophe skips and over-long
-   surfaces), so each probe of the greedy scan answers as the full
-   gazetteer would: parity is structural, not re-implemented.
+   batch's spans into a {surface: senses} slice plus entity vectors,
+   builds its KB view (``linking._kb_view``) and links through the
+   broadcast path's own entry point (``linking._link_tokens``:
+   detection, then picking). The slice holds every gazetteer n-gram
+   occurring in the batch (the join target is the label table, so
+   over-long surfaces never match), so each probe of the greedy scan
+   answers as the full gazetteer would, F6 apostrophe rule included:
+   parity is structural, not re-implemented.
 
 Entity context vectors are computed distributed too (mapInPandas over
 the entities table) and ride the sense table as float32 arrays, so no
@@ -97,8 +98,11 @@ def entity_vectors_table(entities: DataFrame, wvec_bc=None) -> DataFrame:
 def _candidate_spans(conv_tok: DataFrame, idx: DataFrame) -> DataFrame:
     """Token positions that can start a surface (join vs the index),
     expanded into candidate (begin, end, surface) ngrams JVM-side.
-    The F6 apostrophe rule and the MAX_LABEL_CHARS guard apply here,
-    exactly where detect_mentions applies them."""
+    No detection rule is repeated here: the MAX_LABEL_CHARS cap is
+    already on the labels these candidates join against, and the
+    kernel's Python detection applies the F6 apostrophe rule (which
+    cannot fire on these tokens anyway: ``'`` is a boundary character
+    of spec.BOUNDARY_PATTERN, so no token ends with it)."""
     positions = conv_tok.select(
         "conv_id",
         "turn_idx",
@@ -143,26 +147,13 @@ def _candidate_spans(conv_tok: DataFrame, idx: DataFrame) -> DataFrame:
             )
         ).alias("g"),
     )
-    prev_tok = F.element_at("tokens", F.col("pos"))  # 1-based: pos-1 (0-based)
-    this_tok = F.element_at("tokens", F.col("pos") + 1)
-    # element_at index 0 is invalid in Spark — guard the pos==0 case
-    # with when() so the access can never be evaluated, rather than
-    # relying on And short-circuit order surviving predicate rewrites
-    prev_ends_apos = F.when(
-        F.col("pos") > 0, prev_tok.endswith("'")
-    ).otherwise(F.lit(False))
     return expanded.select(
         "conv_id",
         "turn_idx",
         F.col("pos").alias("begin"),
         (F.col("pos") + F.col("g.ln")).alias("end"),
         F.col("g.surface").alias("surface"),
-        (
-            (F.col("g.ln") == 1)
-            & (F.length(this_tok) == 1)
-            & prev_ends_apos
-        ).alias("apos_skip"),
-    ).filter(~F.col("apos_skip") & (F.length("surface") < spec.MAX_LABEL_CHARS))
+    )
 
 
 def link_mentions_shuffle(
@@ -235,7 +226,6 @@ def link_mentions_shuffle(
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         vec_fn = spec.store_vec_fn(wvec_bc.value) if wvec_bc is not None else None
         for pdf in batches:
-            tokens_by_row = [list(t) for t in pdf["tokens"].tolist()]
             # batch-local KB slice: the senses (and entity vectors) of
             # every surface that matched in this batch — exactly the
             # entries of the broadcast gazetteer the scan can probe
@@ -255,13 +245,9 @@ def link_mentions_shuffle(
                             evecs[int(s["entity_id"])] = np.asarray(
                                 s["vec"], dtype=np.float32
                             )
-            interned = linking._intern_tokens(tokens_by_row)
-            found_by_row = linking._detect_all(
-                tokens_by_row, gaz, spec.build_first_token_index(gaz), interned
-            )
-            picked_by_row = linking._pick_batch(
-                tokens_by_row, found_by_row, gaz, evecs,
-                linking._build_evec_pack(evecs), score_mode, vec_fn, interned,
+            picked_by_row = linking._link_tokens(
+                [list(t) for t in pdf["tokens"].tolist()],
+                linking._kb_view(gaz, evecs), score_mode, vec_fn,
             )
             yield linking.linked_frame(picked_by_row, pdf)
 

@@ -150,7 +150,7 @@ class KGPipeline:
         return self._read("conversations")
 
     def kb(self) -> dict[str, DataFrame]:
-        return {n: self._read(n) for n in ("entities", "aliases", "label_stats")}
+        return {n: self._read(n) for n in ("entities", "label_stats")}
 
     # -- stage 1: linked mentions (bucket-resumable Arrow stage) -----------
     def stage_linked(

@@ -348,9 +348,9 @@ def entity_vec(evecs: dict, eid: int):
     """Entity vector with the referential-integrity default: a sense
     whose entity_id has no entities row scores with the ZERO vector
     (centroid()'s empty-vocab result). The ONE definition shared by
-    every scoring path — the kernels' batch picker (lr mode calls it;
-    centroid mode gathers _build_evec_pack's trailing zero row, the
-    same value), the shuffle path's sense table (left-join + coalesce
+    every scoring path — the kernels' batch picker (both context
+    scorers gather _build_evec_pack's trailing zero row, the same
+    value), the shuffle path's sense table (left-join + coalesce
     to the zero array) and the oracle — so a KB with dangling
     entity_ids cannot fork the semantics."""
     v = evecs.get(eid)

@@ -616,8 +616,6 @@ def _staged_triples(
     import os
     import shutil
 
-    import pyarrow as pa
-
     from grisp_spark.kg.pipeline import KGPipeline
 
     conv, kb = _centroid_corpus_kb(spark, sf_dir)
@@ -633,19 +631,6 @@ def _staged_triples(
     conv.write.mode("overwrite").parquet(os.path.join(data_dir, "conversations.parquet"))
     for name, df in kb.items():
         df.write.mode("overwrite").parquet(os.path.join(data_dir, f"{name}.parquet"))
-    # the bootstrap KB has no alias table; the pipeline contract reads
-    # one, so stage an empty frame with the datagen schema. It goes in
-    # as an empty Arrow table: that plans as a LocalTableScan, while an
-    # empty list (or an empty pandas frame, which skips Arrow) builds
-    # a PythonRDD whose tasks fork pickle-mode python workers (the
-    # closure.py driver-path rule)
-    aliases = pa.schema(
-        [("alias", pa.string()), ("entity_id", pa.int64()),
-         ("kind", pa.string()), ("chain_hops", pa.int32())]
-    ).empty_table()
-    spark.createDataFrame(aliases).write.mode("overwrite").parquet(
-        os.path.join(data_dir, "aliases.parquet")
-    )
     result = KGPipeline(
         spark, data_dir, out_dir, n_buckets=4, **pipeline_kwargs
     ).run(resume=False)

@@ -4,12 +4,10 @@ The reference is pure batch (three full XML passes,
 PageStep.java:71, LabelSensesStep.java:77, LabelOccurrencesStep.java:78);
 this module is the forward-looking increment: new conversation files
 land in a directory (the stand-in for Kafka / Iceberg incremental
-reads), the same broadcast gazetteer links mentions per micro-batch,
-and windowed counts aggregate with a watermark for late turns.
-
-The linking stage is reused verbatim inside ``foreachBatch`` — the
-batch/streaming unification is exactly why the stage contract is
-"DataFrame in → DataFrame out"."""
+reads), windowed counts aggregate with a watermark for late turns, and
+a watermarked dedup drops repeated turns. The streaming KG itself
+(linking + triples over the same broadcast KB) is
+streaming/stateful.streaming_triples, run on stream_conversations."""
 
 from __future__ import annotations
 
@@ -60,24 +58,3 @@ def dedup_stream(stream: DataFrame, within: str = "10 minutes") -> DataFrame:
         .dropDuplicatesWithinWatermark(["text_hash"])
     )
 
-
-def stream_linked_mentions(
-    spark: SparkSession, in_dir: str, out_dir: str, gaz_bc, evec_bc
-):
-    """Incremental linking: each micro-batch runs the same
-    link_mentions stage and appends parquet. Returns the query handle
-    (caller: q.processAllAvailable(); q.stop())."""
-    from grisp_spark.kg import linking
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        linked = linking.link_mentions(batch_df, gaz_bc, evec_bc, 8)
-        linked.write.mode("append").parquet(out_dir)
-
-    return (
-        stream_conversations(spark, in_dir)
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", out_dir + "_ckpt")
-        .start()
-    )

@@ -5,11 +5,12 @@ The batch pipeline's 2-turn window becomes keyed streaming state: for
 each conv_id, the state holds (last turn_idx, last entity set), so
 triples emit incrementally as turns arrive — the Structured-Streaming
 twin of the fused map-side batch path (linking.link_and_extract). Each
-state group's turns go through the same kernel: linking._link_rows
-(tokenize → detect → the batch scorer) and
-linking.emit_window_triples, seeded with the group's state as the
-window carry — so a turn that is not the stored turn + 1 starts a new
-window, exactly as in the batch paths."""
+state group's turns go through the same kernel: the linker built by
+linking._broadcast_linker (tokenize → linking._link_tokens over the
+executor's cached KB view) and linking.emit_window_triples,
+seeded with the group's state as the window carry — so a turn that
+is not the stored turn + 1 starts a new window, exactly as in the
+batch paths."""
 
 from __future__ import annotations
 
@@ -26,12 +27,7 @@ STATE_SCHEMA = "last_turn int, ents array<long>"
 def make_processor(gaz_bc, evec_bc, canon_bc):
     """Returns the applyInPandasWithState function closed over the
     broadcast KB structures."""
-    # driver-side stable broadcast ids — the executor-local index and
-    # entity-vector pack cache keys (process() is invoked once PER
-    # CONVERSATION GROUP per micro-batch; rebuilding either each time
-    # would scan the whole KB per group)
-    cache_key = gaz_bc._jbroadcast.id()
-    evec_key = evec_bc._jbroadcast.id()
+    link = linking._broadcast_linker(gaz_bc, evec_bc, "centroid", None)
 
     def process(
         key: tuple,
@@ -44,7 +40,6 @@ def make_processor(gaz_bc, evec_bc, canon_bc):
                 {"conv_id": [], "turn_idx": [], "subj": [], "pred": [], "obj": []}
             )
             return
-        gaz = gaz_bc.value
         (conv_id,) = key
         if state.exists:
             last_turn, prev_list = state.get
@@ -52,11 +47,7 @@ def make_processor(gaz_bc, evec_bc, canon_bc):
         else:
             carry = linking.NO_WINDOW
         rows = pd.concat(batches, ignore_index=True).sort_values("turn_idx")
-        picked_by_row = linking._link_rows(
-            rows["text"].tolist(), gaz, evec_bc.value,
-            linking._first_token_index(gaz, cache_key), "centroid", None,
-            evec_key,
-        )
+        picked_by_row = link(rows["text"].tolist())
         out, (_conv, last_turn, prev_set) = linking.emit_window_triples(
             ([p[3] for p in picked] for picked in picked_by_row),
             rows["conv_id"].tolist(), rows["turn_idx"].tolist(),

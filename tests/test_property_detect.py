@@ -128,24 +128,16 @@ def jvm_slice(rows, gazetteer):
     """The batch-local gazetteer slice the shuffle path's JVM join
     builds (linking_shuffle._candidate_spans ⋈ the sense table): every
     gazetteer n-gram of ≤ MAX_LABEL_TOKENS tokens that occurs in the
-    batch, is under MAX_LABEL_CHARS and is not an F6 apostrophe skip."""
+    batch and is under MAX_LABEL_CHARS (the cap on the label table the
+    candidates join against). Like the JVM, it keeps F6 apostrophe
+    skips: the kernel's Python detection applies that rule."""
     out = {}
     for tokens in rows:
         n = len(tokens)
         for i in range(n):
             for ln in range(1, min(spec.MAX_LABEL_TOKENS, n - i) + 1):
                 surf = spec.ngram_key(" ".join(tokens[i : i + ln]))
-                apos_skip = (
-                    ln == 1
-                    and len(tokens[i]) == 1
-                    and i > 0
-                    and tokens[i - 1].endswith("'")
-                )
-                if (
-                    surf in gazetteer
-                    and len(surf) < spec.MAX_LABEL_CHARS
-                    and not apos_skip
-                ):
+                if surf in gazetteer and len(surf) < spec.MAX_LABEL_CHARS:
                     out[surf] = gazetteer[surf]
     return out
 

@@ -1,38 +1,14 @@
-"""Structured-streaming ingest smoke: file-source micro-batches drive
-the same linking stage; results equal the batch run."""
+"""Structured-streaming ingest smoke: file-source micro-batches,
+watermarked windowed counts and watermarked dedup. Streaming KG
+parity with the batch path is tests/test_stateful_streaming.py."""
 
 import os
 import shutil
 
-from grisp_spark.kg import datagen, linking
+from grisp_spark.kg import datagen
 from grisp_spark.streaming import ingest
 
 DATA = "/root/repo/.data/stream_test"
-
-
-def test_stream_matches_batch(spark):
-    shutil.rmtree(DATA, ignore_errors=True)
-    datagen.write_dataset(os.path.join(DATA, "kb"), seed=11, n_convs=20)
-    # split conversations into two "arriving" files
-    conv = spark.read.parquet(os.path.join(DATA, "kb", "conversations.parquet"))
-    in_dir = os.path.join(DATA, "incoming")
-    conv.repartition(3).write.mode("overwrite").parquet(in_dir)
-
-    kb = {
-        n: spark.read.parquet(os.path.join(DATA, "kb", f"{n}.parquet"))
-        for n in ("entities", "aliases", "label_stats")
-    }
-    gaz_bc, evec_bc, _canon_bc = linking.build_kb_broadcasts(spark, kb)
-
-    out_dir = os.path.join(DATA, "linked_stream")
-    q = ingest.stream_linked_mentions(spark, in_dir, out_dir, gaz_bc, evec_bc)
-    q.processAllAvailable()
-    q.stop()
-
-    got = spark.read.parquet(out_dir)
-    batch = linking.link_mentions(conv, gaz_bc, evec_bc, 8)
-    key = lambda r: (r.conv_id, r.turn_idx, r.begin, r.end, int(r.entity_id))  # noqa: E731
-    assert {key(r) for r in got.collect()} == {key(r) for r in batch.collect()}
 
 
 def test_watermark_drops_late_rows(spark):
@@ -95,8 +71,12 @@ def test_watermark_drops_late_rows(spark):
 
 
 def test_windowed_counts(spark):
+    shutil.rmtree(os.path.join(DATA, "kb"), ignore_errors=True)
+    datagen.write_dataset(os.path.join(DATA, "kb"), seed=11, n_convs=20)
     conv = spark.read.parquet(os.path.join(DATA, "kb", "conversations.parquet"))
+    # split conversations into three "arriving" files
     in_dir = os.path.join(DATA, "incoming")
+    conv.repartition(3).write.mode("overwrite").parquet(in_dir)
     stream = ingest.stream_conversations(spark, in_dir)
     agg = ingest.windowed_turn_counts(stream)
     q = (

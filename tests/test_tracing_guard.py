@@ -82,3 +82,29 @@ def test_kernel_capture_drives_every_span():
     for key in ("kernel.mentions", "kernel.linked", "kernel.turns_per_s"):
         assert m[key] > 0, (key, m)
     assert 0 < m["kernel.link_ratio"] <= 1
+
+
+def test_only_linking_calls_the_kernel_steps():
+    """One linking entry point: outside kg/linking.py no module of the
+    package names a kernel step (every kernel goes through
+    linking._link_tokens), so the steps the traced run patches stay
+    the only route from tokens to picked spans."""
+    import pathlib
+
+    import grisp_spark
+
+    steps = {"_intern_tokens", "_detect_all", "_pick_all", "_pick_batch", "_link_rows"}
+    root = pathlib.Path(grisp_spark.__file__).parent
+    hits = []
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "kg" / "linking.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            name = (
+                getattr(node, "id", None)
+                or getattr(node, "attr", None)
+                or (node.name if isinstance(node, ast.alias) else None)
+            )
+            if name in steps:
+                hits.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert not hits, hits
